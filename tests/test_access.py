@@ -49,6 +49,26 @@ def test_dml_privileges(engine):
     engine.sql("DROP TABLE acl_t")
 
 
+@pytest.mark.parametrize(
+    "stmt",
+    ["/* c */ DROP TABLE acl_t", "-- c\nDROP TABLE acl_t", "/* c */ drop table acl_t"],
+)
+def test_leading_comment_cannot_bypass_checks(engine, stmt):
+    engine.sql("DROP TABLE IF EXISTS acl_t")
+    engine.sql("CREATE TABLE acl_t AS SELECT 1 AS x")
+    engine.sql("CREATE ROLE writer")
+    engine.sql("GRANT SELECT, INSERT ON acl_t TO ROLE writer")
+    engine.sql("SET ROLE writer")
+    try:
+        with pytest.raises(AccessDenied):
+            engine.sql(stmt)
+    finally:
+        engine.sql("SET ROLE NONE")
+    assert engine.sql("SELECT count(*) AS c FROM acl_t").collect()[0].c == 1
+    engine.sql(stmt)
+    assert "acl_t" not in engine.dml_tables
+
+
 def test_revoke(engine):
     engine.sql("CREATE ROLE temp_r")
     engine.sql("GRANT SELECT ON nation TO ROLE temp_r")

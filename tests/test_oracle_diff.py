@@ -23,3 +23,9 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+def test_registry_size():
+    # all_specs imports every query module without catching import errors;
+    # a module renamed or dropped from its lists shrinks this count.
+    assert len(all_specs()) == 304

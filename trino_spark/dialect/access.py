@@ -27,10 +27,15 @@ AccessDeniedException before execution).
 from __future__ import annotations
 
 import re
+import time
 
 from pyspark.sql import DataFrame
 
+from trino_spark.session import local_frame
+
 _PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE")
+# How long kill_query waits for its victim to stop.
+_KILL_WAIT_S = 30.0
 
 
 class AccessDenied(PermissionError):
@@ -80,7 +85,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
         if name in st["roles"]:
             raise ValueError(f"role already exists: {name}")
         st["roles"][name] = set()
-        return spark.createDataFrame([(name,)], "role: string")
+        return local_frame(spark, [(name,)], "role: string")
     if up[:2] == ["DROP", "ROLE"]:
         name = s.split()[2].strip('"').lower()
         if name not in st["roles"]:
@@ -88,7 +93,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
         del st["roles"][name]
         if st["current"] == name:
             st["current"] = None
-        return spark.createDataFrame([(name,)], "role: string")
+        return local_frame(spark, [(name,)], "role: string")
     if up[:2] == ["SET", "ROLE"]:
         name = s.split()[2].strip('"').lower()
         if name == "none":
@@ -97,12 +102,12 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             if name not in st["roles"]:
                 raise ValueError(f"role not found: {name}")
             st["current"] = name
-        return spark.createDataFrame([(name,)], "role: string")
+        return local_frame(spark, [(name,)], "role: string")
     if up[:3] == ["SHOW", "CURRENT", "ROLES"]:
         # ShowRolesTask with CURRENT: the enabled roles of this session —
         # the SET ROLE plus everything transitively granted to it
         rows = sorted((r,) for r in _effective_roles(st, st["current"])) if st["current"] else []
-        return spark.createDataFrame(rows or [], "role: string")
+        return local_frame(spark, rows or [], "role: string")
     if up[:3] == ["SHOW", "ROLE", "GRANTS"]:
         # ShowRoleGrants: roles granted NON-recursively to the session
         # identity (docs sql/show-role-grants.md)
@@ -110,10 +115,10 @@ def try_execute(engine, sql: str) -> DataFrame | None:
         rows = sorted(
             (g,) for g, grantee in st.get("role_grants", set()) if grantee == cur
         ) if cur else []
-        return spark.createDataFrame(rows or [], "role: string")
+        return local_frame(spark, rows or [], "role: string")
     if up[:2] == ["SHOW", "ROLES"]:
         rows = [(r,) for r in sorted(st["roles"])]
-        return spark.createDataFrame(rows or [], "role: string")
+        return local_frame(spark, rows or [], "role: string")
     if up[:2] == ["SHOW", "GRANTS"]:
         m = re.match(r"SHOW\s+GRANTS\s+ON\s+(?:TABLE\s+)?([\w.\"]+)", s, re.IGNORECASE)
         table = m.group(1).strip('"').split(".")[-1].lower() if m else None
@@ -123,7 +128,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             for priv, tbl in sorted(grants)
             if table is None or tbl == table
         ]
-        return spark.createDataFrame(rows or [], "grantee: string, privilege: string, table_name: string")
+        return local_frame(spark, rows or [], "grantee: string, privilege: string, table_name: string")
     if up[:1] == ["GRANT"]:
         # role-to-role grant (docs sql/grant-roles.md; GrantRolesTask):
         # GRANT r1 [, r2 ...] TO ROLE r [WITH ADMIN OPTION]
@@ -148,7 +153,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
                     raise ValueError(f"circular role grant: {r} -> {grantee}")
                 st.setdefault("role_grants", set()).add((r, grantee))
                 granted.append(r)
-            return spark.createDataFrame([(g, grantee) for g in granted], "role: string, grantee: string")
+            return local_frame(spark, [(g, grantee) for g in granted], "role: string, grantee: string")
         return _grant_revoke(engine, s, revoke=False)
     if up[:1] == ["REVOKE"]:
         rr = re.match(
@@ -164,7 +169,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             for r in rr.group(1).split(","):
                 r = r.strip().strip('"').lower()
                 st.setdefault("role_grants", set()).discard((r, grantee))
-            return spark.createDataFrame([(grantee,)], "grantee: string")
+            return local_frame(spark, [(grantee,)], "grantee: string")
         return _grant_revoke(engine, s, revoke=True)
     if up[:1] == ["DENY"]:
         # DENY privilege ON t TO role (grammar #deny; DenyTask.java):
@@ -185,7 +190,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
         if role not in st["roles"]:
             raise ValueError(f"role not found: {role}")
         st.setdefault("denies", {}).setdefault(role, set()).update((p, table) for p in privs)
-        return spark.createDataFrame([(role, table)], "role: string, table_name: string")
+        return local_frame(spark, [(role, table)], "role: string, table_name: string")
     if up[:3] == ["COMMENT", "ON", "TABLE"]:
         m = re.match(r"COMMENT\s+ON\s+TABLE\s+([\w.\"]+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE)
         if not m:
@@ -195,7 +200,7 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             st["table_comments"].pop(tbl, None)
         else:
             st["table_comments"][tbl] = m.group(2).replace("''", "'")
-        return spark.createDataFrame([(tbl,)], "table: string")
+        return local_frame(spark, [(tbl,)], "table: string")
     if up[:3] == ["COMMENT", "ON", "COLUMN"]:
         m = re.match(
             r"COMMENT\s+ON\s+COLUMN\s+([\w.\"]+)\.(\w+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE
@@ -208,10 +213,10 @@ def try_execute(engine, sql: str) -> DataFrame | None:
             st["column_comments"].pop(key, None)
         else:
             st["column_comments"][key] = m.group(3).replace("''", "'")
-        return spark.createDataFrame([(f"{key[0]}.{key[1]}",)], "column: string")
+        return local_frame(spark, [(f"{key[0]}.{key[1]}",)], "column: string")
     if "system.metadata.table_comments" in s:
         rows = [(t_, c) for t_, c in sorted(st["table_comments"].items())]
-        spark.createDataFrame(rows or [], "table_name: string, comment: string").createOrReplaceTempView(
+        local_frame(spark, rows or [], "table_name: string, comment: string").createOrReplaceTempView(
             "_system_metadata_table_comments"
         )
         return engine.sql(s.replace("system.metadata.table_comments", "_system_metadata_table_comments"))
@@ -242,7 +247,7 @@ def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
             st["roles"][role].discard((p, table))
         else:
             st["roles"][role].add((p, table))
-    return engine.spark.createDataFrame([(role, table)], "role: string, table_name: string")
+    return local_frame(engine.spark, [(role, table)], "role: string, table_name: string")
 
 
 _REL_RX = re.compile(r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w.]*)", re.IGNORECASE)
@@ -667,35 +672,36 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
         sf = float(_lit(args[0])) if args else 1.0
         prefix = _lit(args[1]) if len(args) > 1 else "tpchgen_"
         tpchgen.register_tpch_catalog(spark, sf, prefix=str(prefix))
-        return spark.createDataFrame([(f"{prefix}*", sf)], "tables: string, sf: double")
+        return local_frame(spark, [(f"{prefix}*", sf)], "tables: string, sf: double")
     if name == "register_faker":
         from trino_spark.sources import faker
 
         view, schema, n = str(_lit(args[0])), str(_lit(args[1])), int(_lit(args[2]))
         seed = int(_lit(args[3])) if len(args) > 3 else 0
         faker.gen(spark, schema, n, seed=seed).createOrReplaceTempView(view)
-        return spark.createDataFrame([(view, n)], "table: string, rows: bigint")
+        return local_frame(spark, [(view, n)], "table: string, rows: bigint")
     if name == "flush_query_log":
         n = len(getattr(engine, "_query_log", []) or [])
         engine._query_log = []
-        return spark.createDataFrame([(n,)], "flushed: bigint")
+        return local_frame(spark, [(n,)], "flushed: bigint")
     if name == "add_row_filter":
         add_row_filter(engine, str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])))
-        return spark.createDataFrame(
-            [(str(_lit(args[0])), str(_lit(args[1])))], "role: string, table_name: string"
+        return local_frame(
+            spark, [(str(_lit(args[0])), str(_lit(args[1])))], "role: string, table_name: string"
         )
     if name == "add_column_mask":
         add_column_mask(
             engine, str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])), str(_lit(args[3]))
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(str(_lit(args[0])), str(_lit(args[1])), str(_lit(args[2])))],
             "role: string, table_name: string, column_name: string",
         )
     if name == "drop_row_filter":
         st = _state(engine)
         st["row_filters"].pop((str(_lit(args[0])).lower(), str(_lit(args[1])).lower()), None)
-        return spark.createDataFrame([(str(_lit(args[1])),)], "table_name: string")
+        return local_frame(spark, [(str(_lit(args[1])),)], "table_name: string")
     if name == "kill_query":
         # system.runtime.kill_query(query_id, message) — reference:
         # main/connector/system/KillQueryProcedure.java:62. Cancels the
@@ -706,36 +712,34 @@ def try_execute_call(engine, sql: str) -> "DataFrame | None":
         running = getattr(engine, "_running_queries", {})
         if qid not in running:
             raise ValueError(f"query not found or not running: {qid}")
-        # cancelJobGroup only reaches jobs ACTIVE at this instant — a victim
-        # still planning (or between jobs) would survive it. Record the kill
-        # in a set the server consults around its collect, and cancel future
-        # jobs too where the Spark version supports it, so a kill issued at
-        # any point after submission terminates the query.
+        # The kill is recorded in a set the server consults around its
+        # collect (a victim still planning has no job to cancel), and the
+        # job group is cancelled together with its future jobs. That flag
+        # does not cover everything: the DAGScheduler checks it only for
+        # jobs, and AQE submits every shuffle stage as a map-stage job
+        # (submitMapStage), so a stage the victim submits after this call
+        # still runs. Keep cancelling the group's active jobs until the
+        # server deregisters the victim, bounded by _KILL_WAIT_S.
         killed = getattr(engine, "_killed_queries", None)
         if killed is None:
             killed = engine._killed_queries = set()
         killed.add(qid)
         sc = engine.spark.sparkContext
-        cancel_future = getattr(sc, "cancelJobGroupAndFutureJobs", None)
-        if callable(cancel_future):
-            cancel_future(qid)
-        else:
-            try:
-                # PySpark does not surface this method, but the JVM
-                # SparkContext has it (Spark >= 3.5): it also cancels jobs
-                # the group submits AFTER the call, closing the window
-                # where a kill lands between the victim's planning and its
-                # first job becoming active.
-                sc._jsc.sc().cancelJobGroupAndFutureJobs(qid)
-            except Exception:
-                sc.cancelJobGroup(qid)
-        return spark.createDataFrame([(qid, msg)], "query_id: string, message: string")
+        jsc = sc._jsc.sc()
+        jsc.cancelJobGroupAndFutureJobs(qid)
+        # A statement killing its own query would wait on itself.
+        if sc.getLocalProperty("spark.jobGroup.id") != qid:
+            deadline = time.monotonic() + _KILL_WAIT_S
+            while qid in running and time.monotonic() < deadline:
+                time.sleep(0.05)
+                jsc.cancelJobGroup(qid)
+        return local_frame(spark, [(qid, msg)], "query_id: string, message: string")
     if name == "drop_column_mask":
         st = _state(engine)
         masks = st["column_masks"].get((str(_lit(args[0])).lower(), str(_lit(args[1])).lower()))
         if masks:
             masks.pop(str(_lit(args[2])).lower(), None)
-        return spark.createDataFrame([(str(_lit(args[1])),)], "table_name: string")
+        return local_frame(spark, [(str(_lit(args[1])),)], "table_name: string")
     raise ValueError(f"procedure not found: {name}")
 
 

@@ -31,6 +31,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from trino_spark.session import local_frame
+
 _CREATE_RX = re.compile(
     r"CREATE\s+CATALOG\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>\"[^\"]+\"|\w+)\s+"
     r"USING\s+(?P<conn>\w+)"
@@ -158,7 +160,7 @@ def _require_owner(engine, what: str) -> None:
 
 
 def _row(engine, name: str) -> DataFrame:
-    return engine.spark.createDataFrame([(name,)], "catalog: string")
+    return local_frame(engine.spark, [(name,)], "catalog: string")
 
 
 def resolve(engine, sql: str) -> str:
@@ -248,7 +250,7 @@ def _view_for(engine, m: re.Match) -> str | None:
         tables = mount.setdefault("tables", {})
         if (schema, table) not in tables:
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        spark.createDataFrame([], tables[(schema, table)]).createOrReplaceTempView(view)
+        local_frame(spark, [], tables[(schema, table)]).createOrReplaceTempView(view)
     elif conn == "faker":
         # plugin/trino-faker FakerMetadata: deterministic synthetic rows.
         # Catalog properties fix the row schema/count; the table name
@@ -301,7 +303,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
             spark.catalog.dropTempView(view)
         elif "IF EXISTS" not in stripped.upper():
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
-        return spark.createDataFrame([(0,)], "rows: bigint")
+        return local_frame(spark, [(0,)], "rows: bigint")
     if up0 in ("DELETE", "TRUNCATE"):
         # memory connector supports whole-table delete only (the
         # reference's MemoryMetadata has no row-level delete either).
@@ -310,9 +312,9 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
         if (schema, table) not in tables:
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
         if conn == "memory":
-            empty = spark.createDataFrame([], tables[(schema, table)])
+            empty = local_frame(spark, [], tables[(schema, table)])
             empty.createOrReplaceTempView(view)
-        return spark.createDataFrame([(0,)], "rows: bigint")
+        return local_frame(spark, [(0,)], "rows: bigint")
     # INSERT INTO / CTAS: evaluate the source query through the engine so
     # dialect SQL, routines, and security rewrites all apply.
     rest = stripped[m.end():].lstrip()
@@ -324,7 +326,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     if conn == "blackhole":
         n = src.count()  # swallow: count is the only thing retained
         tables[(schema, table)] = src.schema
-        return spark.createDataFrame([(n,)], "rows: bigint")
+        return local_frame(spark, [(n,)], "rows: bigint")
     if up0 == "INSERT" and (schema, table) in tables:
         # Positional alignment to the table layout (the reference's
         # INSERT column rule), like dml._insert does for managed tables.
@@ -345,10 +347,10 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
         all_rows = spark.table(view).collect() + new_rows
     else:
         all_rows = new_rows
-    spark.createDataFrame(all_rows, src.schema).createOrReplaceTempView(view)
+    local_frame(spark, all_rows, src.schema).createOrReplaceTempView(view)
     tables[(schema, table)] = src.schema
     mount["views"].add(view)
-    return spark.createDataFrame([(len(new_rows),)], "rows: bigint")
+    return local_frame(spark, [(len(new_rows),)], "rows: bigint")
 
 
 def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
@@ -411,7 +413,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
         elif "IF EXISTS" not in stripped.upper():
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
         _invalidate()
-        return spark.createDataFrame([(0,)], "rows: bigint")
+        return local_frame(spark, [(0,)], "rows: bigint")
     if up0 in ("DELETE", "TRUNCATE"):
         if re.search(r"\bWHERE\b", stripped, re.IGNORECASE):
             raise ValueError(
@@ -423,7 +425,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
         # capture the schema, then write a source-independent empty frame
         # (overwriting a path the plan still reads from is undefined)
         tgt_schema = _read(pdir).schema
-        empty = spark.createDataFrame([], tgt_schema)
+        empty = local_frame(spark, [], tgt_schema)
         _writer(empty).mode("overwrite").save(pdir)
         if fmt in ("csv", "json"):
             # zero-row csv/json cannot be schema-inferred on re-read —
@@ -433,13 +435,13 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
             with open(os.path.join(pdir, "_ts_schema.json"), "w") as fh:
                 _json.dump(tgt_schema.jsonValue(), fh)
         _invalidate()
-        return spark.createDataFrame([(0,)], "rows: bigint")
+        return local_frame(spark, [(0,)], "rows: bigint")
     rest = stripped[m.end():].lstrip()
     if up0 == "CREATE":
         rest = re.sub(r"^AS\s+", "", rest, flags=re.IGNORECASE)
         if os.path.isdir(pdir):
             if "IF NOT EXISTS" in stripped.upper():
-                return spark.createDataFrame([(0,)], "rows: bigint")
+                return local_frame(spark, [(0,)], "rows: bigint")
             raise ValueError(f"table already exists: {cat}.{schema}.{table}")
     elif not os.path.isdir(pdir):
         raise ValueError(f"table not found: {cat}.{schema}.{table}")
@@ -465,7 +467,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
     _writer(src).mode("append" if up0 == "INSERT" else "overwrite").save(pdir)
     _invalidate()
     n = int(obs.get["n"])
-    return spark.createDataFrame([(n,)], "rows: bigint")
+    return local_frame(spark, [(n,)], "rows: bigint")
 
 
 def _schema_sf(schema: str) -> float:
@@ -492,4 +494,4 @@ def show_catalogs(engine, stripped: str) -> DataFrame:
             "^" + re.escape(m.group(1)).replace("%", ".*").replace("_", ".") + "$"
         )
         names = [n for n in names if rx.match(n)]
-    return engine.spark.createDataFrame([(n,) for n in names] or [], "catalog: string")
+    return local_frame(engine.spark, [(n,) for n in names] or [], "catalog: string")

@@ -55,6 +55,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from trino_spark.operators.merge import merge_into
+from trino_spark.session import local_frame
 
 #: retained historical versions per table (current version excluded);
 #: older snapshot dirs are removed — lakehouse snapshot expiration.
@@ -359,7 +360,7 @@ def _ctas(engine, sql: str) -> DataFrame:
     if_not_exists = re.search(r"IF\s+NOT\s+EXISTS", sql[: m.start(3)], re.IGNORECASE)
     if name in _managed(engine):
         if if_not_exists:
-            return engine.spark.createDataFrame([(0,)], "rows: bigint")
+            return local_frame(engine.spark, [(0,)], "rows: bigint")
         raise ValueError(f"table already exists: {name}")
     # A fresh table must not inherit a stale layout from a same-named
     # predecessor (layouts are popped at DROP, but be defensive).
@@ -368,7 +369,7 @@ def _ctas(engine, sql: str) -> DataFrame:
     partition_by = _parse_with_props(m.group(2))
     df = engine.sql(m.group(3))
     n = _commit(engine, name, df, partition_by=partition_by, operation="ctas")
-    return engine.spark.createDataFrame([(n,)], "rows: bigint")
+    return local_frame(engine.spark, [(n,)], "rows: bigint")
 
 
 def _parse_with_props(with_txt: str | None) -> list[str] | None:
@@ -413,14 +414,14 @@ def _drop(engine, sql: str) -> DataFrame:
         engine.spark.sql(f"DROP TABLE {name}")
     elif idx == 2:
         raise ValueError(f"table not found: {name}")
-    return engine.spark.createDataFrame([(0,)], "rows: bigint")
+    return local_frame(engine.spark, [(0,)], "rows: bigint")
 
 
 def _truncate(engine, sql: str) -> DataFrame:
     name = _norm_name(sql.split()[2])
     df = _read(engine, name)
     _commit(engine, name, df.limit(0), operation="truncate")
-    return engine.spark.createDataFrame([(0,)], "rows: bigint")
+    return local_frame(engine.spark, [(0,)], "rows: bigint")
 
 
 def _insert(engine, sql: str) -> DataFrame:
@@ -462,7 +463,7 @@ def _insert(engine, sql: str) -> DataFrame:
     # existing data). Inserted count from footer metadata (before/after).
     before = _written_rows(_require_managed(engine, name))
     total = _commit(engine, name, aligned, append_base=True, operation="insert")
-    return engine.spark.createDataFrame([(total - before,)], "rows: bigint")
+    return local_frame(engine.spark, [(total - before,)], "rows: bigint")
 
 
 def _affected_partitions(engine, name: str, df: DataFrame, pred):
@@ -542,7 +543,7 @@ def _delete(engine, sql: str) -> DataFrame:
         # Unconditional DELETE == TRUNCATE shape; count from footers.
         before = _written_rows(_require_managed(engine, name))
         _commit(engine, name, df.limit(0), operation="delete")
-        return engine.spark.createDataFrame([(before,)], "rows: bigint")
+        return local_frame(engine.spark, [(before,)], "rows: bigint")
     # DELETE removes rows where pred is TRUE; NULL predicate keeps.
     where = m.group(2) if m.group(2) is not None else "true"
     pred = F.coalesce(
@@ -560,7 +561,7 @@ def _delete(engine, sql: str) -> DataFrame:
     if scoped is not None:
         cond, untouched = scoped
         if cond is None:  # predicate matched nothing: no new version
-            return engine.spark.createDataFrame([(0,)], "rows: bigint")
+            return local_frame(engine.spark, [(0,)], "rows: bigint")
         # Rewrite only the affected partitions (partition-pruned scan);
         # untouched partitions are hardlinked into the new version.
         after = _commit(
@@ -569,7 +570,7 @@ def _delete(engine, sql: str) -> DataFrame:
         )
     else:
         after = _commit(engine, name, df.filter(~pred), operation="delete")
-    return engine.spark.createDataFrame([(before - after,)], "rows: bigint")
+    return local_frame(engine.spark, [(before - after,)], "rows: bigint")
 
 
 def _update(engine, sql: str) -> DataFrame:
@@ -633,13 +634,13 @@ def _update(engine, sql: str) -> DataFrame:
     if scoped is not None:
         cond, untouched = scoped
         if cond is None:
-            return engine.spark.createDataFrame([(0,)], "rows: bigint")
+            return local_frame(engine.spark, [(0,)], "rows: bigint")
         out = _project(df.filter(cond).observe(obs, n_expr))
         _commit(engine, name, out, preserve_rel_dirs=untouched, operation="update")
     else:
         out = _project(df.observe(obs, n_expr))
         _commit(engine, name, out, operation="update")
-    return engine.spark.createDataFrame([(int(obs.get["n"] or 0),)], "rows: bigint")
+    return local_frame(engine.spark, [(int(obs.get["n"] or 0),)], "rows: bigint")
 
 
 def _split_top_level(text: str, sep: str) -> list[str]:
@@ -808,8 +809,8 @@ def _merge(engine, sql: str) -> DataFrame:
         out = out.unionByName(hidden)
     _commit(engine, tgt_name, out, operation="merge")
     m_ = obs.get
-    return engine.spark.createDataFrame(
-        [(int((m_["touched"] or 0) + (m_["inserted"] or 0)),)], "rows: bigint"
+    return local_frame(
+        engine.spark, [(int((m_["touched"] or 0) + (m_["inserted"] or 0)),)], "rows: bigint"
     )
 
 
@@ -899,7 +900,8 @@ def resolve_metadata_tables(engine, sql: str) -> str:
         kind = m.group(2).lower()
         if kind == "files":
             view = f"{name}__files"
-            engine.spark.createDataFrame(
+            local_frame(
+                engine.spark,
                 _file_rows(_require_managed(engine, name)) or [],
                 "file_path: string, file_format: string, partition: string, "
                 "record_count: bigint, file_size_in_bytes: bigint",
@@ -913,7 +915,8 @@ def resolve_metadata_tables(engine, sql: str) -> str:
                 c[1] += 1
                 c[2] += nbytes
             view = f"{name}__partitions"
-            engine.spark.createDataFrame(
+            local_frame(
+                engine.spark,
                 [(p, c[0], c[1], c[2]) for p, c in sorted(agg.items(), key=lambda kv: str(kv[0]))] or [],
                 "partition: string, record_count: bigint, file_count: bigint, "
                 "total_size: bigint",
@@ -932,16 +935,16 @@ def resolve_metadata_tables(engine, sql: str) -> str:
                 for b in sorted(_br._registry(name))
             ]
             view = f"{name}__refs"
-            engine.spark.createDataFrame(
-                rows, "name: string, type: string, version: bigint"
+            local_frame(
+                engine.spark, rows, "name: string, type: string, version: bigint"
             ).createOrReplaceTempView(view)
             return view
         if kind == "properties":
             # Iceberg PropertiesTable analog: SET PROPERTIES key/values.
             props = getattr(engine, "_table_properties", {}).get(name, {})
             view = f"{name}__properties"
-            engine.spark.createDataFrame(
-                sorted(props.items()) or [], "key: string, value: string"
+            local_frame(
+                engine.spark, sorted(props.items()) or [], "key: string, value: string"
             ).createOrReplaceTempView(view)
             return view
         log = _read_log(name)
@@ -957,7 +960,8 @@ def resolve_metadata_tables(engine, sql: str) -> str:
             for e in log
         ]
         view = f"{name}__snapshots"
-        engine.spark.createDataFrame(
+        local_frame(
+            engine.spark,
             rows or [],
             "version: bigint, committed_at: string, operation: string, "
             "is_current: boolean, expired: boolean",
@@ -1131,14 +1135,14 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
             raise ValueError(f"view not found: {name}")
         if existed is not None:
             engine.spark.catalog.dropTempView(name)
-        return engine.spark.createDataFrame([(name,)], "view: string")
+        return local_frame(engine.spark, [(name,)], "view: string")
     if up[:3] == ["SHOW", "CREATE", "VIEW"]:
         name = _norm_name(stripped.split()[3])
         views = getattr(engine, "views", {})
         if name not in views:
             raise ValueError(f"view not found: {name}")
-        return engine.spark.createDataFrame(
-            [(f"CREATE VIEW {name} AS\n{views[name]}",)], "create_view: string"
+        return local_frame(
+            engine.spark, [(f"CREATE VIEW {name} AS\n{views[name]}",)], "create_view: string"
         )
     if up[:2] == ["CREATE", "TABLE"] and " AS " not in f" {stripped.upper()} ":
         return _create_empty_table(engine, stripped)
@@ -1159,13 +1163,13 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
             raise ValueError(f"view not found: {name}")
         if m.group(3):  # REFRESH: re-resolve the definition against sources
             engine.sql(views[name]).createOrReplaceTempView(name)
-            return engine.spark.createDataFrame([(name,)], "view: string")
+            return local_frame(engine.spark, [(name,)], "view: string")
         new = _norm_name(m.group(2))
         views[new] = views.pop(name)
         engine.spark.catalog.dropTempView(name)
         engine.sql(views[new]).createOrReplaceTempView(new)
         refresh_infoschema(engine, changed=new, dropped=name)
-        return engine.spark.createDataFrame([(new,)], "view: string")
+        return local_frame(engine.spark, [(new,)], "view: string")
     if up[:3] == ["ALTER", "MATERIALIZED", "VIEW"]:
         # #renameMaterializedView: the stored data moves with the name.
         m = re.match(
@@ -1178,7 +1182,7 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
         name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
         if name not in engine.materialized_views:
             if re.search(r"IF\s+EXISTS", stripped, re.IGNORECASE):
-                return engine.spark.createDataFrame([(name,)], "materialized_view: string")
+                return local_frame(engine.spark, [(name,)], "materialized_view: string")
             raise ValueError(f"materialized view not found: {name}")
         engine.materialized_views[new] = engine.materialized_views.pop(name)
         engine._mv_meta[new] = engine._mv_meta.pop(name, {})
@@ -1190,7 +1194,7 @@ def try_execute_ddl(engine, sql: str) -> DataFrame | None:
             os.rename(os.path.join(mv_dir, name), os.path.join(mv_dir, new))
             engine.spark.read.parquet(os.path.join(mv_dir, new)).createOrReplaceTempView(new)
         engine.spark.catalog.dropTempView(name)
-        return engine.spark.createDataFrame([(new,)], "materialized_view: string")
+        return local_frame(engine.spark, [(new,)], "materialized_view: string")
     if up[:2] in (["CREATE", "SCHEMA"], ["DROP", "SCHEMA"], ["ALTER", "SCHEMA"]) or up[:3] == [
         "SHOW", "CREATE", "SCHEMA",
     ]:
@@ -1220,8 +1224,8 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
         if reg[name]:
             kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(reg[name].items()))
             props = f"\nWITH (\n   {kv}\n)"
-        return spark.createDataFrame(
-            [(f"CREATE SCHEMA {name}{props}",)], "create_schema: string"
+        return local_frame(
+            spark, [(f"CREATE SCHEMA {name}{props}",)], "create_schema: string"
         )
     if up[:2] == ["CREATE", "SCHEMA"]:
         m = re.match(
@@ -1235,13 +1239,13 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
         name = _norm_name(m.group("name"))
         if name in reg:
             if m.group("ine"):
-                return spark.createDataFrame([(name,)], "schema: string")
+                return local_frame(spark, [(name,)], "schema: string")
             raise ValueError(f"schema already exists: {name}")
         reg[name] = {
             pm.group(1).lower(): pm.group(2)
             for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", m.group("props") or "")
         }
-        return spark.createDataFrame([(name,)], "schema: string")
+        return local_frame(spark, [(name,)], "schema: string")
     if up[:2] == ["DROP", "SCHEMA"]:
         m = re.match(
             r"DROP\s+SCHEMA\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>[\w.\"]+)(?:\s+(?:CASCADE|RESTRICT))?\s*$",
@@ -1255,10 +1259,10 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
             raise ValueError("cannot drop the default schema")
         if name not in reg:
             if m.group("ie"):
-                return spark.createDataFrame([(name,)], "schema: string")
+                return local_frame(spark, [(name,)], "schema: string")
             raise ValueError(f"schema not found: {name}")
         reg.pop(name)
-        return spark.createDataFrame([(name,)], "schema: string")
+        return local_frame(spark, [(name,)], "schema: string")
     # ALTER SCHEMA s RENAME TO s2
     m = re.match(
         r"ALTER\s+SCHEMA\s+([\w.\"]+)\s+RENAME\s+TO\s+([\w\"]+)\s*$", stripped, re.IGNORECASE
@@ -1269,7 +1273,7 @@ def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
     if name not in reg:
         raise ValueError(f"schema not found: {name}")
     reg[new] = reg.pop(name)
-    return spark.createDataFrame([(new,)], "schema: string")
+    return local_frame(spark, [(new,)], "schema: string")
 
 
 def _create_view(engine, sql: str) -> DataFrame:
@@ -1290,7 +1294,7 @@ def _create_view(engine, sql: str) -> DataFrame:
     engine.sql(defn).createOrReplaceTempView(name)
     engine.views[name] = defn
     refresh_infoschema(engine, changed=name)
-    return engine.spark.createDataFrame([(name,)], "view: string")
+    return local_frame(engine.spark, [(name,)], "view: string")
 
 
 def _create_empty_table(engine, sql: str) -> DataFrame:
@@ -1304,7 +1308,7 @@ def _create_empty_table(engine, sql: str) -> DataFrame:
     name = _norm_name(m.group(1))
     if name in _managed(engine):
         if re.search(r"IF\s+NOT\s+EXISTS", sql, re.IGNORECASE):
-            return engine.spark.createDataFrame([(0,)], "rows: bigint")
+            return local_frame(engine.spark, [(0,)], "rows: bigint")
         raise ValueError(f"table already exists: {name}")
     cols = []
     for piece in _split_top_level(m.group(2), ","):
@@ -1312,9 +1316,9 @@ def _create_empty_table(engine, sql: str) -> DataFrame:
         if len(parts) != 2:
             raise ValueError(f"cannot parse column definition: {piece}")
         cols.append(f"{_norm_name(parts[0])} {_trino_type_to_spark(parts[1])}")
-    empty = engine.spark.createDataFrame([], ", ".join(cols))
+    empty = local_frame(engine.spark, [], ", ".join(cols))
     _commit(engine, name, empty)
-    return engine.spark.createDataFrame([(0,)], "rows: bigint")
+    return local_frame(engine.spark, [(0,)], "rows: bigint")
 
 
 def _trino_type_to_spark(t: str) -> str:
@@ -1355,7 +1359,7 @@ def _alter_table(engine, sql: str) -> DataFrame:
             (pm.group(1).lower(), pm.group(2))
             for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", action)
         )
-        return engine.spark.createDataFrame([(0,)], "rows: bigint")
+        return local_frame(engine.spark, [(0,)], "rows: bigint")
     dm = re.match(
         r"ALTER\s+COLUMN\s+(\w+)\s+(SET\s+DEFAULT\s+(.+)|DROP\s+DEFAULT|DROP\s+NOT\s+NULL)\s*$",
         action,
@@ -1375,7 +1379,7 @@ def _alter_table(engine, sql: str) -> DataFrame:
             defaults[(name, col)] = dm.group(3).strip()
         elif verb.startswith("DROP DEFAULT"):
             defaults.pop((name, col), None)
-        return engine.spark.createDataFrame([(0,)], "rows: bigint")
+        return local_frame(engine.spark, [(0,)], "rows: bigint")
     df = _read(engine, name)
     if au.startswith("ALTER COLUMN") and "SET DATA TYPE" in au:
         # #setColumnType (SetColumnTypeTask.java; Iceberg type evolution):
@@ -1390,13 +1394,13 @@ def _alter_table(engine, sql: str) -> DataFrame:
             *[F.col(c).cast(typ).alias(c) if c == col else F.col(c) for c in df.columns]
         )
         _commit(engine, name, out)
-        return engine.spark.createDataFrame([(0,)], "rows: bigint")
+        return local_frame(engine.spark, [(0,)], "rows: bigint")
     if au.startswith("ADD COLUMN"):
         am = re.match(r"ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+(.+)$", action, re.IGNORECASE)
         col, typ = _norm_name(am.group(1)), _trino_type_to_spark(am.group(2))
         if col in df.columns:
             if re.search(r"IF\s+NOT\s+EXISTS", action, re.IGNORECASE):
-                return engine.spark.createDataFrame([(0,)], "rows: bigint")
+                return local_frame(engine.spark, [(0,)], "rows: bigint")
             raise ValueError(f"column already exists: {col}")
         out = df.withColumn(col, F.lit(None).cast(typ))
     elif au.startswith("DROP COLUMN"):
@@ -1446,11 +1450,11 @@ def _alter_table(engine, sql: str) -> DataFrame:
             renamed = renamed.select(*lcols)
         renamed.createOrReplaceTempView(new)
         refresh_infoschema(engine, changed=new, dropped=name)
-        return engine.spark.createDataFrame([(0,)], "rows: bigint")
+        return local_frame(engine.spark, [(0,)], "rows: bigint")
     else:
         raise ValueError(f"unsupported ALTER TABLE action: {action[:60]}")
     _commit(engine, name, out)
-    return engine.spark.createDataFrame([(0,)], "rows: bigint")
+    return local_frame(engine.spark, [(0,)], "rows: bigint")
 
 
 def _file_count(path: str) -> int:
@@ -1514,7 +1518,8 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
             if scoped is not None:
                 cond, untouched = scoped
                 if cond is None:  # predicate matched nothing: no-op commit
-                    return spark.createDataFrame(
+                    return local_frame(
+                        spark,
                         [(0, before, before)],
                         "rows: bigint, files_before: int, files_after: int",
                     )
@@ -1523,7 +1528,8 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
                     engine, name, compacted,
                     preserve_rel_dirs=untouched, operation="optimize",
                 )
-                return spark.createDataFrame(
+                return local_frame(
+                    spark,
                     [(n, before, _file_count(path))],
                     "rows: bigint, files_before: int, files_after: int",
                 )
@@ -1540,7 +1546,8 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
             target = max(1, -(-size // threshold))  # ceil
             compacted = df.repartition(int(target))
         n = _commit(engine, name, compacted, operation="optimize")
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(n, before, _file_count(path))],
             "rows: bigint, files_before: int, files_after: int",
         )
@@ -1561,10 +1568,10 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
                 e["expired"] = True
                 expired += 1
         _write_log(name, log)
-        return spark.createDataFrame([(expired,)], "expired_snapshots: bigint")
+        return local_frame(spark, [(expired,)], "expired_snapshots: bigint")
     if proc == "drop_extended_stats":
         getattr(engine, "_stats_cache", {}).pop(name, None)
-        return spark.createDataFrame([(name,)], "table: string")
+        return local_frame(spark, [(name,)], "table: string")
     if proc == "remove_orphan_files":
         parent, base = os.path.dirname(path), os.path.basename(path)
         removed = 0
@@ -1573,7 +1580,7 @@ def _table_execute(engine, name: str, action: str) -> DataFrame:
                 if d.startswith((f"{base}.staging-", f"{base}.old-")):
                     shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
                     removed += 1
-        return spark.createDataFrame([(removed,)], "removed_dirs: bigint")
+        return local_frame(spark, [(removed,)], "removed_dirs: bigint")
     raise ValueError(f"unknown table procedure: {proc}")
 
 

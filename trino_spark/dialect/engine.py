@@ -17,6 +17,7 @@ from trino_spark.catalog import ALL_TABLES, Catalog
 from trino_spark.dialect import routines as _routines_mod
 from trino_spark.dialect.rewrites import translate
 from trino_spark.infoschema import register_information_schema, rewrite_show
+from trino_spark.session import local_frame
 
 __all__ = ["TrinoEngine", "translate"]
 
@@ -241,6 +242,14 @@ class TrinoEngine:
     def _sql_inner(self, trino_sql: str) -> DataFrame:
         from trino_spark.dialect import prepared as _prep
 
+        if trino_sql.lstrip().startswith(("--", "/*")):
+            # Leading comments would hide the statement kind from the
+            # keyword dispatch and the access checks below.
+            from trino_spark.dialect.tokenizer import tokenize
+
+            toks = tokenize(trino_sql)
+            lead = next((i for i, t in enumerate(toks) if t.kind != "WS"), len(toks))
+            trino_sql = "".join(t.text for t in toks[lead:])
         if "@" in trino_sql and getattr(self, "dml_tables", None):
             # Branch refs t@b (grammar SqlBase.g4:80,221; Iceberg branch
             # semantics): resolve BEFORE time travel so `t@b FOR VERSION
@@ -337,7 +346,8 @@ class TrinoEngine:
             # row in local mode; on a real cluster this would enumerate
             # executors.
             sc = self.spark.sparkContext
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [(sc.applicationId, sc.master, sc.version, True, "active")],
                 "node_id: string, http_uri: string, node_version: string, coordinator: boolean, state: string",
             ).createOrReplaceTempView("_system_runtime_nodes")
@@ -358,7 +368,8 @@ class TrinoEngine:
             rows = [(n, d, "VIEW") for n, d in sorted(getattr(self, "views", {}).items())] + [
                 (n, d, "MATERIALIZED VIEW") for n, d in sorted(self.materialized_views.items())
             ]
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 rows or [], "table_name: string, view_definition: string, view_type: string"
             ).createOrReplaceTempView("_information_schema_views")
             trino_sql = self._sub_outside_literals(
@@ -384,7 +395,8 @@ class TrinoEngine:
                             int(info.numFailedTasks),
                         )
                     )
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 rows or [],
                 "node_id: string, task_id: string, state: string, splits: int,"
                 " running_splits: int, completed_splits: int, failed_splits: int",
@@ -408,7 +420,8 @@ class TrinoEngine:
                 # {Schema,Table,Column,Analyze,MaterializedView}Properties
                 # SystemTable.java: the property names each catalog accepts
                 rows = [("spark", n, t, d, desc) for n, t, d, desc in _props]
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     rows or [],
                     "catalog_name: string, property_name: string, type: string,"
                     " default_value: string, description: string",
@@ -422,8 +435,8 @@ class TrinoEngine:
                 (name, mount["connector"])
                 for name, mount in sorted(getattr(self, "catalogs", {}).items())
             ]
-            self.spark.createDataFrame(
-                rows, "catalog_name: string, connector_name: string"
+            local_frame(
+                self.spark, rows, "catalog_name: string, connector_name: string"
             ).createOrReplaceTempView("_system_metadata_catalogs")
             trino_sql = self._sub_outside_literals(
                 trino_sql, "system.metadata.catalogs", "_system_metadata_catalogs"
@@ -438,8 +451,8 @@ class TrinoEngine:
                 )
                 for n in sorted(self.materialized_views)
             ]
-            self.spark.createDataFrame(
-                rows or [], "name: string, definition: string, freshness: string"
+            local_frame(
+                self.spark, rows or [], "name: string, definition: string, freshness: string"
             ).createOrReplaceTempView("_system_metadata_mvs")
             trino_sql = self._sub_outside_literals(
                 trino_sql, "system.metadata.materialized_views", "_system_metadata_mvs"
@@ -477,8 +490,8 @@ class TrinoEngine:
                 ("timestamp with time zone", 2014), ("array", 2003),
                 ("map", 2000), ("row", 2002), ("json", 2000),
             ]
-            self.spark.createDataFrame(
-                rows, "type_name: string, data_type: int"
+            local_frame(
+                self.spark, rows, "type_name: string, data_type: int"
             ).createOrReplaceTempView("_system_jdbc_types")
             trino_sql = self._sub_outside_literals(
                 trino_sql, "system.jdbc.types", "_system_jdbc_types"
@@ -487,7 +500,8 @@ class TrinoEngine:
             # system.runtime.queries (QuerySystemTable.java): planning-time
             # dispatch state per recorded query.
             rows = list(getattr(self, "_query_log", []))
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 rows or [],
                 "query_id: string, state: string, user: string, query: string,"
                 " elapsed_ms: double, created: timestamp, started: timestamp,"
@@ -522,11 +536,11 @@ class TrinoEngine:
         if prep is not None:
             name, body = prep
             self.prepared[name] = body
-            return self.spark.createDataFrame([(name.lower(),)], "prepared: string")
+            return local_frame(self.spark, [(name.lower(),)], "prepared: string")
         dealloc = _prep.parse_deallocate(trino_sql)
         if dealloc is not None:
             self.prepared.pop(dealloc, None)
-            return self.spark.createDataFrame([(dealloc.lower(),)], "prepared: string")
+            return local_frame(self.spark, [(dealloc.lower(),)], "prepared: string")
         imm = _prep.parse_execute_immediate(trino_sql)
         if imm is not None:
             stmt, args = imm
@@ -544,12 +558,12 @@ class TrinoEngine:
             src = getattr(self, "_function_sources", {}).get(fname.upper())
             if src is None:
                 raise ValueError(f"function not found: {fname}")
-            return self.spark.createDataFrame([(src,)], "create_function: string")
+            return local_frame(self.spark, [(src,)], "create_function: string")
         if up0[:2] == ["SET", "PATH"]:
             # #setPath (SetPathTask.java): recorded; the engine's single
             # function namespace makes it a session attribute only.
             self.sql_path = trino_sql.split(None, 2)[2].strip().rstrip(";")
-            return self.spark.createDataFrame([(self.sql_path,)], "path: string")
+            return local_frame(self.spark, [(self.sql_path,)], "path: string")
         routine = _routines_mod.parse_create_function(trino_sql)
         if routine is not None:
             if not hasattr(self, "_function_sources"):
@@ -563,13 +577,13 @@ class TrinoEngine:
                 self.spark.udf.register(routine.name.lower(), routine.fn, routine.returns)
             else:
                 self.routines[routine.name] = routine
-            return self.spark.createDataFrame([(routine.name.lower(),)], "function: string")
+            return local_frame(self.spark, [(routine.name.lower(),)], "function: string")
         dropped = _routines_mod.parse_drop_function(trino_sql)
         if dropped is not None:
             self.routines.pop(dropped, None)
             self.python_routines.pop(dropped, None)
             getattr(self, "_function_sources", {}).pop(dropped.upper(), None)
-            return self.spark.createDataFrame([(dropped.lower(),)], "function: string")
+            return local_frame(self.spark, [(dropped.lower(),)], "function: string")
         stripped = trino_sql.strip().rstrip(";")
         up = stripped.upper().split()
         # Access control + comments (AccessControl SPI / CommentTask.java):
@@ -645,13 +659,13 @@ class TrinoEngine:
                 raise ValueError(f"CREATE MATERIALIZED VIEW {name}: missing AS <query>")
             self.materialized_views[name] = defn.strip()
             self._mv_refresh(name)
-            return self.spark.createDataFrame([(name,)], "materialized_view: string")
+            return local_frame(self.spark, [(name,)], "materialized_view: string")
         if up[:3] == ["REFRESH", "MATERIALIZED", "VIEW"]:
             name = stripped.split()[3].strip('"').split(".")[-1].lower()
             if name not in self.materialized_views:
                 raise ValueError(f"materialized view not found: {name}")
             n = self._mv_refresh(name)
-            return self.spark.createDataFrame([(name, n)], "materialized_view: string, rows: bigint")
+            return local_frame(self.spark, [(name, n)], "materialized_view: string, rows: bigint")
         if up[:3] == ["DROP", "MATERIALIZED", "VIEW"]:
             parts = stripped.split()
             idx = 5 if len(parts) > 5 and parts[3].upper() == "IF" else 3
@@ -659,12 +673,12 @@ class TrinoEngine:
             self.materialized_views.pop(name, None)
             self._mv_meta.pop(name, None)
             self.spark.catalog.dropTempView(name)
-            return self.spark.createDataFrame([(name,)], "materialized_view: string")
+            return local_frame(self.spark, [(name,)], "materialized_view: string")
         if up[:2] == ["SHOW", "SCHEMAS"] and getattr(self, "schemas", None):
             # CREATE SCHEMA-registered schemas union the table namespace
             # (#showSchemas; the flat namespace maps to 'default').
             rows = sorted(set(self.schemas) | {"default"})
-            return self.spark.createDataFrame([(s,) for s in rows], "schema_name: string")
+            return local_frame(self.spark, [(s,) for s in rows], "schema_name: string")
         if up[:2] == ["SHOW", "CATALOGS"]:
             # Session catalog + dynamic mounts (ShowQueriesRewrite.java).
             from trino_spark.dialect import catalogs as _cats
@@ -682,7 +696,7 @@ class TrinoEngine:
             # SET SESSION properties recorded on this engine
             # (SystemSessionProperties.java surface).
             rows = sorted(self.session_properties.items())
-            return self.spark.createDataFrame(rows or [], "name: string, value: string")
+            return local_frame(self.spark, rows or [], "name: string, value: string")
         if up[:2] == ["SHOW", "FUNCTIONS"]:
             # SHOW FUNCTIONS (ShowQueriesRewrite.java): the engine's
             # function inventory — dialect-mapped Trino names plus every
@@ -713,8 +727,8 @@ class TrinoEngine:
                 + [(n.lower(), "routine", "sql") for n in sorted(self.routines)]
                 + [(n.lower(), "routine", "python") for n in sorted(self.python_routines)]
             )
-            return self.spark.createDataFrame(
-                rows, "function_name: string, kind: string, source: string"
+            return local_frame(
+                self.spark, rows, "function_name: string, kind: string, source: string"
             )
         if up[:3] == ["SHOW", "MATERIALIZED", "VIEWS"]:
             # Freshness surface of system.metadata.materialized_views
@@ -725,8 +739,8 @@ class TrinoEngine:
                 (n, self._mv_freshness(n), self._mv_meta[n]["last_fresh_time"])
                 for n in sorted(self.materialized_views)
             ]
-            return self.spark.createDataFrame(
-                rows or [], "name: string, freshness: string, last_fresh_time: string"
+            return local_frame(
+                self.spark, rows or [], "name: string, freshness: string, last_fresh_time: string"
             )
         if up[:1] == ["EXPLAIN"]:
             # EXPLAIN [ANALYZE] [(TYPE ...)] <stmt> (ExplainRewrite.java):
@@ -782,7 +796,7 @@ class TrinoEngine:
                     text = _json.dumps({"inputTableColumnInfos": rels})
                 else:
                     text = qe.executedPlan().toJSON()
-                return self.spark.createDataFrame([(text,)], "query_plan: string")
+                return local_frame(self.spark, [(text,)], "query_plan: string")
             if up[1:2] == ["ANALYZE"]:
                 text = self.explain_analyze(rest.split(None, 1)[1])
             elif mode == "validate":
@@ -799,7 +813,7 @@ class TrinoEngine:
                 text = "\n".join(rels) if rels else plan
             else:
                 text = self.explain(rest, mode=mode)
-            return self.spark.createDataFrame([(text,)], "query_plan: string")
+            return local_frame(self.spark, [(text,)], "query_plan: string")
         if up[:1] == ["DESCRIBE"] and len(up) == 2:
             # DESCRIBE <table> == SHOW COLUMNS FROM <table> (the reference
             # rewrites it the same way, ShowQueriesRewrite.java).
@@ -813,13 +827,13 @@ class TrinoEngine:
             arg = stripped.split(None, 3)[3].strip()
             zone = "UTC" if arg.upper() == "LOCAL" else arg.strip("'")
             self.spark.conf.set("spark.sql.session.timeZone", zone)
-            return self.spark.createDataFrame([(zone,)], "time_zone: string")
+            return local_frame(self.spark, [(zone,)], "time_zone: string")
         if up[:1] == ["USE"] and len(up) == 2:
             # USE catalog.schema (UseTask.java): single-catalog engine —
             # record the default schema; unqualified names already resolve
             # against the session catalog.
             self._current_schema = stripped.split()[1].strip('"')
-            return self.spark.createDataFrame([(self._current_schema,)], "schema: string")
+            return local_frame(self.spark, [(self._current_schema,)], "schema: string")
         if up[:3] == ["SET", "SESSION", "AUTHORIZATION"]:
             # #setSessionAuthorization (SetSessionAuthorizationTask.java):
             # switch the session identity; CURRENT_USER reflects it.
@@ -836,10 +850,10 @@ class TrinoEngine:
                 )
             user = stripped.split(None, 3)[3].strip().strip("'\"")
             self.session_user = user
-            return self.spark.createDataFrame([(user,)], "user: string")
+            return local_frame(self.spark, [(user,)], "user: string")
         if up[:3] == ["RESET", "SESSION", "AUTHORIZATION"]:
             self.session_user = "trino"
-            return self.spark.createDataFrame([("trino",)], "user: string")
+            return local_frame(self.spark, [("trino",)], "user: string")
         if up[:2] == ["SET", "SESSION"]:
             # SET SESSION k = v (SystemSessionProperties.java surface):
             # recorded per-engine; spark.* keys pass through to the conf.
@@ -848,13 +862,13 @@ class TrinoEngine:
             self.session_properties[key] = val
             if key.startswith("spark."):
                 self.spark.conf.set(key, val)
-            return self.spark.createDataFrame([(key, val)], "name: string, value: string")
+            return local_frame(self.spark, [(key, val)], "name: string, value: string")
         if up[:2] == ["RESET", "SESSION"]:
             key = stripped.split()[2]
             self.session_properties.pop(key, None)
             if key.startswith("spark."):
                 self.spark.conf.unset(key)
-            return self.spark.createDataFrame([(key,)], "name: string")
+            return local_frame(self.spark, [(key,)], "name: string")
         if up[:2] == ["START", "TRANSACTION"]:
             # Transaction statements (StartTransactionTask.java): DML is
             # copy-on-write, so the transaction pins per-table snapshots
@@ -863,7 +877,7 @@ class TrinoEngine:
             from trino_spark.dialect import dml as _dml
 
             _dml.txn_begin(self)
-            return self.spark.createDataFrame([("STARTED",)], "transaction: string")
+            return local_frame(self.spark, [("STARTED",)], "transaction: string")
         if up[:1] in (["COMMIT"], ["ROLLBACK"]):
             from trino_spark.dialect import dml as _dml
 
@@ -871,7 +885,7 @@ class TrinoEngine:
                 _dml.txn_commit(self)
             else:
                 _dml.txn_rollback(self)
-            return self.spark.createDataFrame([(up[0],)], "transaction: string")
+            return local_frame(self.spark, [(up[0],)], "transaction: string")
         if up[:3] == ["SHOW", "CREATE", "TABLE"]:
             # SHOW CREATE TABLE (ShowQueriesRewrite.java): rendered DDL.
             name = stripped.split()[3].strip('"').split(".")[-1].lower()
@@ -893,13 +907,13 @@ class TrinoEngine:
             else:
                 with_props = ""
             ddl = f"CREATE TABLE {name} (\n   {cols}\n){with_props}"
-            return self.spark.createDataFrame([(ddl,)], "create_table: string")
+            return local_frame(self.spark, [(ddl,)], "create_table: string")
         if up[:3] == ["SHOW", "CREATE", "MATERIALIZED"]:
             name = stripped.split()[4].strip('"').split(".")[-1].lower()
             if name not in self.materialized_views:
                 raise ValueError(f"materialized view not found: {name}")
             ddl = f"CREATE MATERIALIZED VIEW {name} AS\n{self.materialized_views[name]}"
-            return self.spark.createDataFrame([(ddl,)], "create_materialized_view: string")
+            return local_frame(self.spark, [(ddl,)], "create_materialized_view: string")
         if up[:3] == ["SHOW", "STATS", "FOR"]:
             from trino_spark.infoschema import show_stats
 
@@ -933,7 +947,7 @@ class TrinoEngine:
             n = show_stats(self.spark, tbl, cache=cache, populate=True).where(
                 "column_name IS NULL"
             ).collect()[0].row_count
-            return self.spark.createDataFrame([(tbl, int(n or 0))], "table_name: string, rows: bigint")
+            return local_frame(self.spark, [(tbl, int(n or 0))], "table_name: string, rows: bigint")
         if up[:2] == ["DESCRIBE", "OUTPUT"] and len(up) == 3:
             name = up[2]
             if name not in self.prepared:
@@ -944,7 +958,8 @@ class TrinoEngine:
             n = sum(1 for t in toks if t.is_sym("?"))
             bound = _p.bind(self.prepared[name], ["NULL"] * n)
             schema = self.spark.sql(translate(bound)).schema
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(f.name, f.dataType.simpleString()) for f in schema],
                 "column_name string, type string",
             )
@@ -955,8 +970,8 @@ class TrinoEngine:
             from trino_spark.dialect import prepared as _p
 
             n = sum(1 for t in _p.tokenize(self.prepared[name]) if t.is_sym("?"))
-            return self.spark.createDataFrame(
-                [(i, "unknown") for i in range(n)], "position int, type string"
+            return local_frame(
+                self.spark, [(i, "unknown") for i in range(n)], "position int, type string"
             )
         shown = rewrite_show(trino_sql)
         if shown is not None:

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Row, SparkSession
 
+from trino_spark.session import local_frame
+
 
 def register_information_schema(spark: SparkSession, tables: dict[str, list[tuple[str, str]]]) -> None:
     """tables: name -> [(column_name, data_type)]."""
@@ -40,10 +42,10 @@ def register_information_schema(spark: SparkSession, tables: dict[str, list[tupl
         "table_catalog string, table_schema string, table_name string,"
         " column_name string, ordinal_position int, data_type string"
     )
-    spark.createDataFrame(trows, tschema).createOrReplaceTempView(
+    local_frame(spark, trows, tschema).createOrReplaceTempView(
         "information_schema_tables"
     )
-    spark.createDataFrame(crows, cschema).createOrReplaceTempView(
+    local_frame(spark, crows, cschema).createOrReplaceTempView(
         "information_schema_columns"
     )
 
@@ -86,7 +88,7 @@ def show_stats(spark: SparkSession, table: str, cache: dict | None = None, popul
     re-registered generator views cannot serve stale numbers."""
     if cache is not None and table in cache:
         rows, schema = cache[table]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     from pyspark.sql import functions as F
     from pyspark.sql.types import NumericType, StringType
 
@@ -127,4 +129,4 @@ def show_stats(spark: SparkSession, table: str, cache: dict | None = None, popul
     )
     if cache is not None and populate:
         cache[table] = (out, schema)
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)

@@ -150,11 +150,8 @@ def all_specs() -> dict[str, QuerySpec]:
 
     mod_specs = {}
     for mod_name in fresh_mods + green_mods:
-        try:
-            mod = importlib.import_module(f"trino_spark.queries.{mod_name}")
-            mod_specs[mod_name] = mod.REG.specs()
-        except ModuleNotFoundError:
-            pass
+        mod = importlib.import_module(f"trino_spark.queries.{mod_name}")
+        mod_specs[mod_name] = mod.REG.specs()
 
     ordered: dict[str, QuerySpec] = {}
 

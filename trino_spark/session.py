@@ -21,7 +21,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Pre-AQE shuffle parallelism: match local cores for tests; a real cluster
 # raises this (or relies on AQE coalescing from a high initial count).
@@ -82,6 +83,7 @@ def get_spark(
         # single map() constructor now silently dedup rather than error.
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
     for k, v in (extra_conf or {}).items():
@@ -89,3 +91,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | StructType) -> DataFrame:
+    """A DataFrame over rows the driver already holds, as a LocalRelation.
+
+    `spark.createDataFrame(list, schema)` parallelizes the rows into an
+    RDD, so every read of the frame is an ExistingRDD scan that runs a
+    Spark job with Python worker tasks. Going through Arrow instead
+    (ArrowConverters.toDataFrame) plans a LocalTableScan: Project/Filter
+    fold into it and collecting it runs no job — the way Trino answers
+    SHOW, information_schema and DML row counts on the coordinator.
+    `rows` are tuples or Rows; `schema` is a DDL string or StructType.
+    """
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    table = (
+        LocalDataToArrowConversion.convert(rows, struct, use_large_var_types=False)
+        if rows
+        else to_arrow_schema(struct).empty_table()
+    )
+    return spark.createDataFrame(table, schema=struct)
