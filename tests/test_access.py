@@ -51,7 +51,13 @@ def test_dml_privileges(engine):
 
 @pytest.mark.parametrize(
     "stmt",
-    ["/* c */ DROP TABLE acl_t", "-- c\nDROP TABLE acl_t", "/* c */ drop table acl_t"],
+    [
+        "/* c */ DROP TABLE acl_t",
+        "-- c\nDROP TABLE acl_t",
+        "/* c */ drop table acl_t",
+        "DROP /* c */ TABLE acl_t",
+        "DROP\n-- c\nTABLE acl_t",
+    ],
 )
 def test_leading_comment_cannot_bypass_checks(engine, stmt):
     engine.sql("DROP TABLE IF EXISTS acl_t")

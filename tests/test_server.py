@@ -373,3 +373,25 @@ def test_version_scalar(server):
     # inside a string literal it is untouched
     cols, rows = fetch_all(server.url(), "SELECT 'version()' AS v")
     assert rows == [["version()"]]
+
+
+def test_commented_set_session_answers_header_and_does_not_leak(server):
+    """The server reads the same classified statement as the engine: a
+    comment before SET SESSION still answers X-Trino-Set-Session, and the
+    property does not stay in the shared engine."""
+    import json
+    import urllib.request
+
+    req = urllib.request.Request(
+        f"{server.url()}/v1/statement",
+        data=b"/* c */ SET SESSION probe_k = 'v'",
+        method="POST",
+    )
+    with urllib.request.urlopen(req) as r:
+        header = r.headers.get("X-Trino-Set-Session")
+        resp = json.loads(r.read())
+    nxt = resp.get("nextUri")
+    while nxt:
+        nxt = json.loads(urllib.request.urlopen(nxt).read()).get("nextUri")
+    assert header == "probe_k=v"
+    assert "probe_k" not in server.engine.session_properties

@@ -74,153 +74,173 @@ def _effective_roles(st, role: str) -> set:
     return out
 
 
-def try_execute(engine, sql: str) -> DataFrame | None:
+def _create_role(engine, stmt) -> DataFrame:
     st = _state(engine)
-    s = sql.strip().rstrip(";")
-    up = s.upper().split()
-    spark = engine.spark
+    name = stmt.text.split()[2].strip('"').lower()
+    if name in st["roles"]:
+        raise ValueError(f"role already exists: {name}")
+    st["roles"][name] = set()
+    return local_frame(engine.spark, [(name,)], "role: string")
 
-    if up[:2] == ["CREATE", "ROLE"]:
-        name = s.split()[2].strip('"').lower()
-        if name in st["roles"]:
-            raise ValueError(f"role already exists: {name}")
-        st["roles"][name] = set()
-        return local_frame(spark, [(name,)], "role: string")
-    if up[:2] == ["DROP", "ROLE"]:
-        name = s.split()[2].strip('"').lower()
+
+def _drop_role(engine, stmt) -> DataFrame:
+    st = _state(engine)
+    name = stmt.text.split()[2].strip('"').lower()
+    if name not in st["roles"]:
+        raise ValueError(f"role not found: {name}")
+    del st["roles"][name]
+    if st["current"] == name:
+        st["current"] = None
+    return local_frame(engine.spark, [(name,)], "role: string")
+
+
+def _set_role(engine, stmt) -> DataFrame:
+    st = _state(engine)
+    name = stmt.text.split()[2].strip('"').lower()
+    if name == "none":
+        st["current"] = None
+    else:
         if name not in st["roles"]:
             raise ValueError(f"role not found: {name}")
-        del st["roles"][name]
-        if st["current"] == name:
-            st["current"] = None
-        return local_frame(spark, [(name,)], "role: string")
-    if up[:2] == ["SET", "ROLE"]:
-        name = s.split()[2].strip('"').lower()
-        if name == "none":
-            st["current"] = None
-        else:
-            if name not in st["roles"]:
-                raise ValueError(f"role not found: {name}")
-            st["current"] = name
-        return local_frame(spark, [(name,)], "role: string")
-    if up[:3] == ["SHOW", "CURRENT", "ROLES"]:
-        # ShowRolesTask with CURRENT: the enabled roles of this session —
-        # the SET ROLE plus everything transitively granted to it
-        rows = sorted((r,) for r in _effective_roles(st, st["current"])) if st["current"] else []
-        return local_frame(spark, rows or [], "role: string")
-    if up[:3] == ["SHOW", "ROLE", "GRANTS"]:
-        # ShowRoleGrants: roles granted NON-recursively to the session
-        # identity (docs sql/show-role-grants.md)
-        cur = st["current"]
-        rows = sorted(
-            (g,) for g, grantee in st.get("role_grants", set()) if grantee == cur
-        ) if cur else []
-        return local_frame(spark, rows or [], "role: string")
-    if up[:2] == ["SHOW", "ROLES"]:
-        rows = [(r,) for r in sorted(st["roles"])]
-        return local_frame(spark, rows or [], "role: string")
-    if up[:2] == ["SHOW", "GRANTS"]:
-        m = re.match(r"SHOW\s+GRANTS\s+ON\s+(?:TABLE\s+)?([\w.\"]+)", s, re.IGNORECASE)
-        table = m.group(1).strip('"').split(".")[-1].lower() if m else None
-        rows = [
-            (role, priv, tbl)
-            for role, grants in sorted(st["roles"].items())
-            for priv, tbl in sorted(grants)
-            if table is None or tbl == table
-        ]
-        return local_frame(spark, rows or [], "grantee: string, privilege: string, table_name: string")
-    if up[:1] == ["GRANT"]:
-        # role-to-role grant (docs sql/grant-roles.md; GrantRolesTask):
-        # GRANT r1 [, r2 ...] TO ROLE r [WITH ADMIN OPTION]
-        rg = re.match(
-            r"GRANT\s+([\w\"]+(?:\s*,\s*[\w\"]+)*)\s+TO\s+ROLE\s+([\w\"]+)"
-            r"(?:\s+WITH\s+ADMIN\s+OPTION)?\s*$",
-            s,
-            re.IGNORECASE,
-        )
-        if rg and " ON " not in s.upper():
-            if st["current"] is not None:
-                raise AccessDenied("Access Denied: only the owner session grants roles")
-            grantee = rg.group(2).strip('"').lower()
-            if grantee not in st["roles"]:
-                raise ValueError(f"role not found: {grantee}")
-            granted = []
-            for r in rg.group(1).split(","):
-                r = r.strip().strip('"').lower()
-                if r not in st["roles"]:
-                    raise ValueError(f"role not found: {r}")
-                if r == grantee or grantee in _effective_roles(st, r):
-                    raise ValueError(f"circular role grant: {r} -> {grantee}")
-                st.setdefault("role_grants", set()).add((r, grantee))
-                granted.append(r)
-            return local_frame(spark, [(g, grantee) for g in granted], "role: string, grantee: string")
+        st["current"] = name
+    return local_frame(engine.spark, [(name,)], "role: string")
+
+
+def _show_current_roles(engine, stmt) -> DataFrame:
+    # ShowRolesTask with CURRENT: the enabled roles of this session —
+    # the SET ROLE plus everything transitively granted to it
+    st = _state(engine)
+    rows = sorted((r,) for r in _effective_roles(st, st["current"])) if st["current"] else []
+    return local_frame(engine.spark, rows or [], "role: string")
+
+
+def _show_role_grants(engine, stmt) -> DataFrame:
+    # ShowRoleGrants: roles granted NON-recursively to the session
+    # identity (docs sql/show-role-grants.md)
+    st = _state(engine)
+    cur = st["current"]
+    rows = sorted(
+        (g,) for g, grantee in st.get("role_grants", set()) if grantee == cur
+    ) if cur else []
+    return local_frame(engine.spark, rows or [], "role: string")
+
+
+def _show_roles(engine, stmt) -> DataFrame:
+    rows = [(r,) for r in sorted(_state(engine)["roles"])]
+    return local_frame(engine.spark, rows or [], "role: string")
+
+
+def _show_grants(engine, stmt) -> DataFrame:
+    st = _state(engine)
+    m = re.match(r"SHOW\s+GRANTS\s+ON\s+(?:TABLE\s+)?([\w.\"]+)", stmt.text, re.IGNORECASE)
+    table = m.group(1).strip('"').split(".")[-1].lower() if m else None
+    rows = [
+        (role, priv, tbl)
+        for role, grants in sorted(st["roles"].items())
+        for priv, tbl in sorted(grants)
+        if table is None or tbl == table
+    ]
+    return local_frame(engine.spark, rows or [], "grantee: string, privilege: string, table_name: string")
+
+
+def _grant(engine, stmt) -> DataFrame:
+    # role-to-role grant (docs sql/grant-roles.md; GrantRolesTask):
+    # GRANT r1 [, r2 ...] TO ROLE r [WITH ADMIN OPTION]
+    st, s = _state(engine), stmt.text
+    rg = re.match(
+        r"GRANT\s+([\w\"]+(?:\s*,\s*[\w\"]+)*)\s+TO\s+ROLE\s+([\w\"]+)"
+        r"(?:\s+WITH\s+ADMIN\s+OPTION)?\s*$",
+        s,
+        re.IGNORECASE,
+    )
+    if not rg or " ON " in s.upper():
         return _grant_revoke(engine, s, revoke=False)
-    if up[:1] == ["REVOKE"]:
-        rr = re.match(
-            r"REVOKE\s+(?:ADMIN\s+OPTION\s+FOR\s+)?([\w\"]+(?:\s*,\s*[\w\"]+)*)"
-            r"\s+FROM\s+ROLE\s+([\w\"]+)\s*$",
-            s,
-            re.IGNORECASE,
-        )
-        if rr and " ON " not in s.upper():
-            if st["current"] is not None:
-                raise AccessDenied("Access Denied: only the owner session revokes roles")
-            grantee = rr.group(2).strip('"').lower()
-            for r in rr.group(1).split(","):
-                r = r.strip().strip('"').lower()
-                st.setdefault("role_grants", set()).discard((r, grantee))
-            return local_frame(spark, [(grantee,)], "grantee: string")
+    if st["current"] is not None:
+        raise AccessDenied("Access Denied: only the owner session grants roles")
+    grantee = rg.group(2).strip('"').lower()
+    if grantee not in st["roles"]:
+        raise ValueError(f"role not found: {grantee}")
+    granted = []
+    for r in rg.group(1).split(","):
+        r = r.strip().strip('"').lower()
+        if r not in st["roles"]:
+            raise ValueError(f"role not found: {r}")
+        if r == grantee or grantee in _effective_roles(st, r):
+            raise ValueError(f"circular role grant: {r} -> {grantee}")
+        st.setdefault("role_grants", set()).add((r, grantee))
+        granted.append(r)
+    return local_frame(engine.spark, [(g, grantee) for g in granted], "role: string, grantee: string")
+
+
+def _revoke(engine, stmt) -> DataFrame:
+    st, s = _state(engine), stmt.text
+    rr = re.match(
+        r"REVOKE\s+(?:ADMIN\s+OPTION\s+FOR\s+)?([\w\"]+(?:\s*,\s*[\w\"]+)*)"
+        r"\s+FROM\s+ROLE\s+([\w\"]+)\s*$",
+        s,
+        re.IGNORECASE,
+    )
+    if not rr or " ON " in s.upper():
         return _grant_revoke(engine, s, revoke=True)
-    if up[:1] == ["DENY"]:
-        # DENY privilege ON t TO role (grammar #deny; DenyTask.java):
-        # an explicit deny wins over any grant at enforcement time.
-        m = re.match(
-            r"DENY\s+(ALL(?:\s+PRIVILEGES)?|[\w,\s]+?)\s+ON\s+(?:TABLE\s+)?([\w.\"]+)\s+TO\s+(?:ROLE\s+)?([\w\"]+)",
-            s,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError(f"cannot parse DENY: {s[:80]}")
-        privs_txt, table, role = m.group(1).upper(), m.group(2), m.group(3).strip('"').lower()
-        table = table.strip('"').split(".")[-1].lower()
-        privs = list(_PRIVS) if privs_txt.startswith("ALL") else [p.strip() for p in privs_txt.split(",")]
-        for p in privs:
-            if p not in _PRIVS:
-                raise ValueError(f"unknown privilege: {p}")
-        if role not in st["roles"]:
-            raise ValueError(f"role not found: {role}")
-        st.setdefault("denies", {}).setdefault(role, set()).update((p, table) for p in privs)
-        return local_frame(spark, [(role, table)], "role: string, table_name: string")
-    if up[:3] == ["COMMENT", "ON", "TABLE"]:
-        m = re.match(r"COMMENT\s+ON\s+TABLE\s+([\w.\"]+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE)
-        if not m:
-            raise ValueError(f"cannot parse COMMENT ON TABLE: {s[:80]}")
-        tbl = m.group(1).strip('"').split(".")[-1].lower()
-        if m.group(3):
-            st["table_comments"].pop(tbl, None)
-        else:
-            st["table_comments"][tbl] = m.group(2).replace("''", "'")
-        return local_frame(spark, [(tbl,)], "table: string")
-    if up[:3] == ["COMMENT", "ON", "COLUMN"]:
-        m = re.match(
-            r"COMMENT\s+ON\s+COLUMN\s+([\w.\"]+)\.(\w+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE
-        )
-        if not m:
-            raise ValueError(f"cannot parse COMMENT ON COLUMN: {s[:80]}")
-        tbl = m.group(1).strip('"').split(".")[-1].lower()
-        key = (tbl, m.group(2).lower())
-        if m.group(4):
-            st["column_comments"].pop(key, None)
-        else:
-            st["column_comments"][key] = m.group(3).replace("''", "'")
-        return local_frame(spark, [(f"{key[0]}.{key[1]}",)], "column: string")
-    if "system.metadata.table_comments" in s:
-        rows = [(t_, c) for t_, c in sorted(st["table_comments"].items())]
-        local_frame(spark, rows or [], "table_name: string, comment: string").createOrReplaceTempView(
-            "_system_metadata_table_comments"
-        )
-        return engine.sql(s.replace("system.metadata.table_comments", "_system_metadata_table_comments"))
-    return None
+    if st["current"] is not None:
+        raise AccessDenied("Access Denied: only the owner session revokes roles")
+    grantee = rr.group(2).strip('"').lower()
+    for r in rr.group(1).split(","):
+        r = r.strip().strip('"').lower()
+        st.setdefault("role_grants", set()).discard((r, grantee))
+    return local_frame(engine.spark, [(grantee,)], "grantee: string")
+
+
+def _deny(engine, stmt) -> DataFrame:
+    # DENY privilege ON t TO role (grammar #deny; DenyTask.java):
+    # an explicit deny wins over any grant at enforcement time.
+    st, s = _state(engine), stmt.text
+    m = re.match(
+        r"DENY\s+(ALL(?:\s+PRIVILEGES)?|[\w,\s]+?)\s+ON\s+(?:TABLE\s+)?([\w.\"]+)\s+TO\s+(?:ROLE\s+)?([\w\"]+)",
+        s,
+        re.IGNORECASE,
+    )
+    if not m:
+        raise ValueError(f"cannot parse DENY: {s[:80]}")
+    privs_txt, table, role = m.group(1).upper(), m.group(2), m.group(3).strip('"').lower()
+    table = table.strip('"').split(".")[-1].lower()
+    privs = list(_PRIVS) if privs_txt.startswith("ALL") else [p.strip() for p in privs_txt.split(",")]
+    for p in privs:
+        if p not in _PRIVS:
+            raise ValueError(f"unknown privilege: {p}")
+    if role not in st["roles"]:
+        raise ValueError(f"role not found: {role}")
+    st.setdefault("denies", {}).setdefault(role, set()).update((p, table) for p in privs)
+    return local_frame(engine.spark, [(role, table)], "role: string, table_name: string")
+
+
+def _comment_on_table(engine, stmt) -> DataFrame:
+    st, s = _state(engine), stmt.text
+    m = re.match(r"COMMENT\s+ON\s+TABLE\s+([\w.\"]+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE)
+    if not m:
+        raise ValueError(f"cannot parse COMMENT ON TABLE: {s[:80]}")
+    tbl = m.group(1).strip('"').split(".")[-1].lower()
+    if m.group(3):
+        st["table_comments"].pop(tbl, None)
+    else:
+        st["table_comments"][tbl] = m.group(2).replace("''", "'")
+    return local_frame(engine.spark, [(tbl,)], "table: string")
+
+
+def _comment_on_column(engine, stmt) -> DataFrame:
+    st, s = _state(engine), stmt.text
+    m = re.match(
+        r"COMMENT\s+ON\s+COLUMN\s+([\w.\"]+)\.(\w+)\s+IS\s+(?:'((?:[^']|'')*)'|(NULL))", s, re.IGNORECASE
+    )
+    if not m:
+        raise ValueError(f"cannot parse COMMENT ON COLUMN: {s[:80]}")
+    tbl = m.group(1).strip('"').split(".")[-1].lower()
+    key = (tbl, m.group(2).lower())
+    if m.group(4):
+        st["column_comments"].pop(key, None)
+    else:
+        st["column_comments"][key] = m.group(3).replace("''", "'")
+    return local_frame(engine.spark, [(f"{key[0]}.{key[1]}",)], "column: string")
 
 
 def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
@@ -253,62 +273,59 @@ def _grant_revoke(engine, s: str, revoke: bool) -> DataFrame:
 _REL_RX = re.compile(r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w.]*)", re.IGNORECASE)
 _KEYWORD_RELS = {"unnest", "json_table", "lateral", "values", "table"}
 
+# Write privileges per statement kind (the checkCan* methods of
+# io.trino.spi.connector.ConnectorAccessControl). Ownership is proxied as
+# holding ALL four privileges on the name.
+_WRITE_PRIVS = {
+    "INSERT INTO": ("INSERT",),
+    "DELETE FROM": ("DELETE",),
+    "UPDATE": ("UPDATE",),
+    "MERGE INTO": ("UPDATE", "INSERT", "DELETE"),
+    "TRUNCATE TABLE": ("DELETE",),
+    "ALTER TABLE": _PRIVS,
+    "DROP TABLE": _PRIVS,
+    "CREATE TABLE": _PRIVS,
+}
+# Kinds whose target needs no SELECT grant besides its write privileges.
+_TARGET_NOT_READ = {"DELETE FROM", "MERGE INTO", "ALTER TABLE", "DROP TABLE", "CREATE TABLE"}
 
-def enforce(engine, sql: str) -> None:
+
+def enforce(engine, stmt) -> None:
     """Raise AccessDenied when the active role lacks a needed privilege.
     Owner sessions (no SET ROLE) bypass — the allow-all default.
 
-    Privilege derivation per statement (reference: the checkCan* methods
-    of io.trino.spi.connector.ConnectorAccessControl):
-    INSERT/DELETE/UPDATE → their own privilege on the target; MERGE →
-    UPDATE+INSERT+DELETE on the target and SELECT on a named USING table;
-    TRUNCATE → DELETE; ALTER/DROP/CREATE TABLE [AS] → ownership, proxied
-    as ALL four privileges on the name; every referenced relation →
-    SELECT."""
+    The statement kind names the write privileges (_WRITE_PRIVS) on the
+    target, read from the code tokens after the kind's keywords; MERGE
+    also needs SELECT on a named USING table, and every relation the text
+    references after FROM / JOIN needs SELECT."""
     st = _state(engine)
     role = st["current"]
-    if role is None:
+    if role is None or stmt.kind in UNCHECKED:
         return
     eff = _effective_roles(st, role)
     grants = set().union(*(st["roles"].get(r, set()) for r in eff))
-    s = sql.strip()
-    up = s.upper().split()
-    toks = s.split()
+    s = stmt.text
     needed: list[tuple[str, str]] = []
     skip_select: set[str] = set()
 
     def _name(raw: str) -> str:
         return raw.strip('"').split(".")[-1].lower().strip("()")
 
-    if up[:2] == ["INSERT", "INTO"]:
-        needed.append(("INSERT", toks[2]))
-    elif up[:2] == ["DELETE", "FROM"]:
-        needed.append(("DELETE", toks[2]))
-        skip_select.add(_name(toks[2]))
-    elif up[:1] == ["UPDATE"]:
-        needed.append(("UPDATE", toks[1]))
-    elif up[:2] == ["MERGE", "INTO"]:
-        tgt = toks[2]
-        needed += [("UPDATE", tgt), ("INSERT", tgt), ("DELETE", tgt)]
-        skip_select.add(_name(tgt))
+    privs = _WRITE_PRIVS.get(stmt.kind, ())
+    if privs:
+        i = len(stmt.kind.split())
+        while stmt.word(i) in ("IF", "NOT", "EXISTS"):
+            i += 1
+        tgt = stmt.name_at(i)
+        # A CTAS target does not exist yet, so the not-a-relation skip
+        # below must not exempt it.
+        needed += [(p, f"!{tgt}" if stmt.kind == "CREATE TABLE" else tgt) for p in privs]
+        if stmt.kind in _TARGET_NOT_READ:
+            skip_select.add(tgt)
+    if stmt.kind == "MERGE INTO":
         um = re.search(r"\bUSING\s+([A-Za-z_][\w.]*)", s, re.IGNORECASE)
         if um:
             needed.append(("SELECT", um.group(1)))
-    elif up[:2] == ["TRUNCATE", "TABLE"]:
-        needed.append(("DELETE", toks[2]))
-    elif up[:2] in (["ALTER", "TABLE"], ["DROP", "TABLE"]) or (
-        up[:2] == ["CREATE", "TABLE"]
-    ):
-        idx = 2
-        if up[2:5] == ["IF", "NOT", "EXISTS"] or up[2:4] == ["IF", "EXISTS"]:
-            idx = 5 if up[3] == "NOT" else 4
-        tgt = toks[idx] if len(toks) > idx else ""
-        # Ownership proxy: the role must hold every privilege on the name.
-        # A CTAS target does not exist yet, so the not-a-relation skip
-        # below must not exempt it.
-        for p in _PRIVS:
-            needed.append((p, f"!{tgt}" if up[:2] == ["CREATE", "TABLE"] else tgt))
-        skip_select.add(_name(tgt))
     for m in _REL_RX.finditer(s):
         name = m.group(1).split(".")[-1].lower()
         if name in _KEYWORD_RELS or name.startswith("__"):
@@ -651,10 +668,10 @@ def map_outside_literals(sql: str, fn) -> str:
 # query-log maintenance.
 
 
-def try_execute_call(engine, sql: str) -> "DataFrame | None":
-    m = re.match(r"CALL\s+([\w.]+)\s*\((.*)\)\s*$", sql.strip().rstrip(";"), re.IGNORECASE | re.DOTALL)
+def _call(engine, stmt) -> DataFrame:
+    m = re.match(r"CALL\s+([\w.]+)\s*\((.*)\)\s*$", stmt.text, re.IGNORECASE | re.DOTALL)
     if not m:
-        return None
+        raise ValueError(f"cannot parse CALL: {stmt.text[:80]}")
     name = m.group(1).lower().split(".")[-1]
     args = [a.strip() for a in _split_call_args(m.group(2))]
     spark = engine.spark
@@ -761,3 +778,27 @@ def _split_call_args(s: str) -> list[str]:
     if "".join(buf).strip():
         out.append("".join(buf))
     return out
+
+
+HANDLERS = {
+    "CREATE ROLE": _create_role,
+    "DROP ROLE": _drop_role,
+    "SET ROLE": _set_role,
+    "SHOW CURRENT ROLES": _show_current_roles,
+    "SHOW ROLE GRANTS": _show_role_grants,
+    "SHOW ROLES": _show_roles,
+    "SHOW GRANTS": _show_grants,
+    "GRANT": _grant,
+    "REVOKE": _revoke,
+    "DENY": _deny,
+    "COMMENT ON TABLE": _comment_on_table,
+    "COMMENT ON COLUMN": _comment_on_column,
+    "CALL": _call,
+}
+# Kinds enforce() leaves alone: this module's statements decide access
+# themselves, and prepared statements and routine definitions are checked
+# when the statement they run is dispatched.
+UNCHECKED = frozenset(HANDLERS) | {
+    "PREPARE", "DEALLOCATE", "EXECUTE", "EXECUTE IMMEDIATE", "SHOW CREATE FUNCTION",
+    "SET PATH", "CREATE FUNCTION", "CREATE OR REPLACE FUNCTION", "DROP FUNCTION",
+}

@@ -100,102 +100,107 @@ def _resolve_source(engine, table: str, src: str) -> str:
     return _managed(engine)[internal]
 
 
-def try_execute(engine, stripped: str) -> DataFrame | None:
-    """Dispatch the four branch statements; None when not one of them."""
-    spark = engine.spark
-    up = stripped.upper().split()
-    if up[:1] == ["CREATE"] and "BRANCH" in up[:4]:
-        m = _CREATE_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse CREATE BRANCH: {stripped}")
-        table, branch = _norm(m.group("table")), m.group("branch").lower()
-        if table not in _managed(engine):
-            raise ValueError(f"branching requires a managed table, got: {table}")
-        reg = _registry(table)
-        replace = re.match(r"CREATE\s+OR\s+REPLACE", stripped, re.IGNORECASE)
-        if branch in reg:
-            if m.group("ine"):
-                return local_frame(spark, [(branch,)], "branch: string")
-            if not replace:
-                raise ValueError(f"branch already exists: {branch}")
-            _drop_fork(engine, table, branch)
-        src_path = _resolve_source(engine, table, (m.group("from") or "main").lower())
-        internal = _internal(table, branch)
-        dst = os.path.join(_warehouse_dir(), internal)
-        shutil.rmtree(dst, ignore_errors=True)
-        os.makedirs(dst, exist_ok=True)
-        _link_tree(src_path, dst)  # shared inodes: fork cost = metadata
-        _managed(engine)[internal] = dst
-        layouts = getattr(engine, "_dml_layouts", None) or {}
-        if table in layouts:
-            layouts[internal] = list(layouts[table])
-        # The fork inherits the base table's DECLARED column order too —
-        # otherwise positional INSERT INTO t@branch and SELECT * would map
-        # against the partition-last physical layout (same class of bug
-        # the DML fuzzer caught on main tables).
-        logical = getattr(engine, "_dml_logical_cols", None) or {}
-        fork = spark.read.parquet(dst)
-        lcols = logical.get(table)
-        if lcols:
-            logical[internal] = list(lcols)
-            if lcols != fork.columns and set(lcols) == set(fork.columns):
-                fork = fork.select(*lcols)
-        fork.createOrReplaceTempView(internal)
-        refresh_infoschema(engine, changed=internal)
-        base_version = max((e["version"] for e in _read_log(table)), default=0)
-        reg[branch] = {"created_from_version": base_version}
-        _write_registry(table, reg)
-        return local_frame(spark, [(branch,)], "branch: string")
-    if up[:2] == ["DROP", "BRANCH"]:
-        m = _DROP_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse DROP BRANCH: {stripped}")
-        table, branch = _norm(m.group("table")), m.group("branch").lower()
-        reg = _registry(table)
-        if branch not in reg:
-            if m.group("ie"):
-                return local_frame(spark, [(branch,)], "branch: string")
-            raise ValueError(f"Branch '{branch}' does not exist")
+def _create_branch(engine, stmt) -> DataFrame:
+    spark, stripped = engine.spark, stmt.text
+    m = _CREATE_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse CREATE BRANCH: {stripped}")
+    table, branch = _norm(m.group("table")), m.group("branch").lower()
+    if table not in _managed(engine):
+        raise ValueError(f"branching requires a managed table, got: {table}")
+    reg = _registry(table)
+    replace = stmt.kind == "CREATE OR REPLACE BRANCH"
+    if branch in reg:
+        if m.group("ine"):
+            return local_frame(spark, [(branch,)], "branch: string")
+        if not replace:
+            raise ValueError(f"branch already exists: {branch}")
         _drop_fork(engine, table, branch)
-        reg.pop(branch)
-        _write_registry(table, reg)
-        return local_frame(spark, [(branch,)], "branch: string")
-    if up[:2] == ["ALTER", "BRANCH"]:
-        m = _FF_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse ALTER BRANCH: {stripped}")
-        table = _norm(m.group("table"))
-        src, tgt = m.group("src").lower(), m.group("tgt").lower()
-        tgt_path = _resolve_source(engine, table, tgt)
-        content = spark.read.parquet(tgt_path)
-        dest = table if src == "main" else _internal(table, src)
-        if src != "main" and src not in _registry(table):
-            raise ValueError(f"Branch '{src}' does not exist")
-        # Restore the destination's DECLARED column order before the
-        # commit — a raw read of a partitioned branch dir is partition-last
-        # and would otherwise corrupt the logical map + snapshot log.
-        lcols = getattr(engine, "_dml_logical_cols", {}).get(dest) or getattr(
-            engine, "_dml_logical_cols", {}
-        ).get(table)
-        if lcols and lcols != content.columns and set(lcols) == set(content.columns):
-            content = content.select(*lcols)
-        n = _commit(engine, dest, content, operation=f"fast_forward_from_{tgt}")
-        return local_frame(spark, [(src, tgt, n)], "branch: string, from_branch: string, rows: bigint")
-    if up[:2] == ["SHOW", "BRANCHES"]:
-        m = _SHOW_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse SHOW BRANCHES: {stripped}")
-        table = _norm(m.group("table"))
-        if table not in _managed(engine):
-            raise ValueError(f"branching requires a managed table, got: {table}")
-        rows = [("main", max((e["version"] for e in _read_log(table)), default=0), None)]
-        for b, meta in sorted(_registry(table).items()):
-            head = max((e["version"] for e in _read_log(_internal(table, b))), default=0)
-            rows.append((b, head, meta.get("created_from_version")))
-        return local_frame(
-            spark, rows, "branch: string, current_version: bigint, created_from_version: bigint"
-        )
-    return None
+    src_path = _resolve_source(engine, table, (m.group("from") or "main").lower())
+    internal = _internal(table, branch)
+    dst = os.path.join(_warehouse_dir(), internal)
+    shutil.rmtree(dst, ignore_errors=True)
+    os.makedirs(dst, exist_ok=True)
+    _link_tree(src_path, dst)  # shared inodes: fork cost = metadata
+    _managed(engine)[internal] = dst
+    layouts = getattr(engine, "_dml_layouts", None) or {}
+    if table in layouts:
+        layouts[internal] = list(layouts[table])
+    # The fork inherits the base table's DECLARED column order too —
+    # otherwise positional INSERT INTO t@branch and SELECT * would map
+    # against the partition-last physical layout (same class of bug
+    # the DML fuzzer caught on main tables).
+    logical = getattr(engine, "_dml_logical_cols", None) or {}
+    fork = spark.read.parquet(dst)
+    lcols = logical.get(table)
+    if lcols:
+        logical[internal] = list(lcols)
+        if lcols != fork.columns and set(lcols) == set(fork.columns):
+            fork = fork.select(*lcols)
+    fork.createOrReplaceTempView(internal)
+    refresh_infoschema(engine, changed=internal)
+    base_version = max((e["version"] for e in _read_log(table)), default=0)
+    reg[branch] = {"created_from_version": base_version}
+    _write_registry(table, reg)
+    return local_frame(spark, [(branch,)], "branch: string")
+
+
+def _drop_branch(engine, stmt) -> DataFrame:
+    spark, stripped = engine.spark, stmt.text
+    m = _DROP_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse DROP BRANCH: {stripped}")
+    table, branch = _norm(m.group("table")), m.group("branch").lower()
+    reg = _registry(table)
+    if branch not in reg:
+        if m.group("ie"):
+            return local_frame(spark, [(branch,)], "branch: string")
+        raise ValueError(f"Branch '{branch}' does not exist")
+    _drop_fork(engine, table, branch)
+    reg.pop(branch)
+    _write_registry(table, reg)
+    return local_frame(spark, [(branch,)], "branch: string")
+
+
+def _fast_forward_branch(engine, stmt) -> DataFrame:
+    spark, stripped = engine.spark, stmt.text
+    m = _FF_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse ALTER BRANCH: {stripped}")
+    table = _norm(m.group("table"))
+    src, tgt = m.group("src").lower(), m.group("tgt").lower()
+    tgt_path = _resolve_source(engine, table, tgt)
+    content = spark.read.parquet(tgt_path)
+    dest = table if src == "main" else _internal(table, src)
+    if src != "main" and src not in _registry(table):
+        raise ValueError(f"Branch '{src}' does not exist")
+    # Restore the destination's DECLARED column order before the
+    # commit — a raw read of a partitioned branch dir is partition-last
+    # and would otherwise corrupt the logical map + snapshot log.
+    lcols = getattr(engine, "_dml_logical_cols", {}).get(dest) or getattr(
+        engine, "_dml_logical_cols", {}
+    ).get(table)
+    if lcols and lcols != content.columns and set(lcols) == set(content.columns):
+        content = content.select(*lcols)
+    n = _commit(engine, dest, content, operation=f"fast_forward_from_{tgt}")
+    return local_frame(spark, [(src, tgt, n)], "branch: string, from_branch: string, rows: bigint")
+
+
+def _show_branches(engine, stmt) -> DataFrame:
+    spark, stripped = engine.spark, stmt.text
+    m = _SHOW_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse SHOW BRANCHES: {stripped}")
+    table = _norm(m.group("table"))
+    if table not in _managed(engine):
+        raise ValueError(f"branching requires a managed table, got: {table}")
+    rows = [("main", max((e["version"] for e in _read_log(table)), default=0), None)]
+    for b, meta in sorted(_registry(table).items()):
+        head = max((e["version"] for e in _read_log(_internal(table, b))), default=0)
+        rows.append((b, head, meta.get("created_from_version")))
+    return local_frame(
+        spark, rows, "branch: string, current_version: bigint, created_from_version: bigint"
+    )
 
 
 def _drop_fork(engine, table: str, branch: str) -> None:
@@ -233,3 +238,13 @@ def resolve(engine, sql: str) -> str:
         return _internal(table, branch)
 
     return map_outside_literals(sql, lambda chunk: _AT_RX.sub(_sub, chunk))
+
+
+# grammar #createBranch / #dropBranch / #fastForwardBranch / #showBranches
+HANDLERS = {
+    "CREATE BRANCH": _create_branch,
+    "CREATE OR REPLACE BRANCH": _create_branch,
+    "DROP BRANCH": _drop_branch,
+    "ALTER BRANCH": _fast_forward_branch,
+    "SHOW BRANCHES": _show_branches,
+}

@@ -82,71 +82,73 @@ def _mounts(engine) -> dict:
     return engine.catalogs
 
 
-def try_execute(engine, stripped: str) -> DataFrame | None:
-    """Dispatch CREATE/DROP CATALOG; None when the statement is neither."""
-    up = stripped.upper().split()
-    if up[:2] == ["CREATE", "CATALOG"]:
-        m = _CREATE_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse CREATE CATALOG: {stripped}")
-        _require_owner(engine, "CREATE CATALOG")
-        name = m.group("name").strip('"').lower()
-        conn = m.group("conn").lower()
-        mounts = _mounts(engine)
-        if name in mounts or name == "spark":
-            if m.group("ine"):
-                return _row(engine, name)
-            raise ValueError(f"catalog already exists: {name}")
-        if conn not in _CONNECTORS:
-            raise ValueError(
-                f"unknown connector: {conn} (supported: {', '.join(_CONNECTORS)})"
-            )
-        props = _parse_props(m.group("props"))
-        if conn in _FILE_CONNECTORS:
-            loc = props.get("location")
-            if not loc or not os.path.isdir(loc):
-                raise ValueError(f"connector {conn} needs location = '<existing dir>'")
-        if conn == "jdbc":
-            url = props.get("url")
-            if not url:
-                raise ValueError("connector jdbc needs url = '<jdbc url>'")
-            opts = {k: v for k, v in props.items() if k != "url"}
-            engine.catalog.register_jdbc_catalog(name, url, **opts)
-        mounts[name] = {
-            "connector": conn,
-            "properties": props,
-            "comment": m.group("comment") or "",
-            "views": set(),
-        }
-        return _row(engine, name)
-    if up[:2] == ["DROP", "CATALOG"]:
-        m = _DROP_RX.match(stripped)
-        if not m:
-            raise ValueError(f"cannot parse DROP CATALOG: {stripped}")
-        _require_owner(engine, "DROP CATALOG")
-        name = m.group("name").strip('"').lower()
-        mounts = _mounts(engine)
-        if name not in mounts:
-            if m.group("ie"):
-                return _row(engine, name)
-            raise ValueError(f"catalog not found: {name}")
-        mount = mounts.pop(name)
-        for view in mount["views"]:
-            engine.spark.catalog.dropTempView(view)
-        if mount["connector"] == "jdbc":
-            conf = engine.spark.conf
-            for key in (
-                f"spark.sql.catalog.{name}",
-                f"spark.sql.catalog.{name}.url",
-                f"spark.sql.catalog.{name}.pushDownAggregate",
-                f"spark.sql.catalog.{name}.pushDownLimit",
-            ):
-                try:
-                    conf.unset(key)
-                except Exception:
-                    pass
-        return _row(engine, name)
-    return None
+def _create_catalog(engine, stmt) -> DataFrame:
+    # grammar SqlBase.g4 #createCatalog; CreateCatalogTask.java via
+    # CatalogFactory
+    stripped = stmt.text
+    m = _CREATE_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse CREATE CATALOG: {stripped}")
+    _require_owner(engine, "CREATE CATALOG")
+    name = m.group("name").strip('"').lower()
+    conn = m.group("conn").lower()
+    mounts = _mounts(engine)
+    if name in mounts or name == "spark":
+        if m.group("ine"):
+            return _row(engine, name)
+        raise ValueError(f"catalog already exists: {name}")
+    if conn not in _CONNECTORS:
+        raise ValueError(
+            f"unknown connector: {conn} (supported: {', '.join(_CONNECTORS)})"
+        )
+    props = _parse_props(m.group("props"))
+    if conn in _FILE_CONNECTORS:
+        loc = props.get("location")
+        if not loc or not os.path.isdir(loc):
+            raise ValueError(f"connector {conn} needs location = '<existing dir>'")
+    if conn == "jdbc":
+        url = props.get("url")
+        if not url:
+            raise ValueError("connector jdbc needs url = '<jdbc url>'")
+        opts = {k: v for k, v in props.items() if k != "url"}
+        engine.catalog.register_jdbc_catalog(name, url, **opts)
+    mounts[name] = {
+        "connector": conn,
+        "properties": props,
+        "comment": m.group("comment") or "",
+        "views": set(),
+    }
+    return _row(engine, name)
+
+
+def _drop_catalog(engine, stmt) -> DataFrame:
+    stripped = stmt.text
+    m = _DROP_RX.match(stripped)
+    if not m:
+        raise ValueError(f"cannot parse DROP CATALOG: {stripped}")
+    _require_owner(engine, "DROP CATALOG")
+    name = m.group("name").strip('"').lower()
+    mounts = _mounts(engine)
+    if name not in mounts:
+        if m.group("ie"):
+            return _row(engine, name)
+        raise ValueError(f"catalog not found: {name}")
+    mount = mounts.pop(name)
+    for view in mount["views"]:
+        engine.spark.catalog.dropTempView(view)
+    if mount["connector"] == "jdbc":
+        conf = engine.spark.conf
+        for key in (
+            f"spark.sql.catalog.{name}",
+            f"spark.sql.catalog.{name}.url",
+            f"spark.sql.catalog.{name}.pushDownAggregate",
+            f"spark.sql.catalog.{name}.pushDownLimit",
+        ):
+            try:
+                conf.unset(key)
+            except Exception:
+                pass
+    return _row(engine, name)
 
 
 def _require_owner(engine, what: str) -> None:
@@ -275,12 +277,13 @@ _DML_TARGET_RX = re.compile(
 )
 
 
-def try_execute_dml(engine, stripped: str) -> DataFrame | None:
+def try_execute_dml(engine, stmt) -> DataFrame | None:
     """DML whose target is a mounted memory/blackhole table (reference:
     the connector page-sink path — MemoryPageSinkProvider stores pages,
     BlackHolePageSink discards them and keeps only counts). Returns None
     for targets that are not catalog-qualified mounts, letting the
     engine-managed DML layer handle them."""
+    stripped = stmt.text
     m = _DML_TARGET_RX.match(stripped)
     if not m:
         return None
@@ -289,22 +292,22 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     if mount is None:
         return None
     conn = mount["connector"]
+    verb = stmt.kind.split()[0]
     if conn in ("parquet", "hive", "csv", "json", "orc"):
-        return _file_catalog_dml(engine, mount, stripped, m)
+        return _file_catalog_dml(engine, mount, stripped, m, verb)
     if conn not in ("memory", "blackhole"):
         raise ValueError(f"catalog {cat} ({conn}) does not support writes")
     spark = engine.spark
-    up0 = stripped.upper().split()[0]
     tables = mount.setdefault("tables", {})
     view = f"__cat_{cat}_{schema}_{table}"
-    if up0 == "DROP":
+    if verb == "DROP":
         if (schema, table) in tables:
             tables.pop((schema, table))
             spark.catalog.dropTempView(view)
         elif "IF EXISTS" not in stripped.upper():
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
         return local_frame(spark, [(0,)], "rows: bigint")
-    if up0 in ("DELETE", "TRUNCATE"):
+    if verb in ("DELETE", "TRUNCATE"):
         # memory connector supports whole-table delete only (the
         # reference's MemoryMetadata has no row-level delete either).
         if re.search(r"\bWHERE\b", stripped, re.IGNORECASE):
@@ -318,7 +321,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     # INSERT INTO / CTAS: evaluate the source query through the engine so
     # dialect SQL, routines, and security rewrites all apply.
     rest = stripped[m.end():].lstrip()
-    if up0 == "CREATE":
+    if verb == "CREATE":
         rest = re.sub(r"^AS\s+", "", rest, flags=re.IGNORECASE)
         if (schema, table) in tables and "IF NOT EXISTS" not in stripped.upper():
             raise ValueError(f"table already exists: {cat}.{schema}.{table}")
@@ -327,7 +330,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
         n = src.count()  # swallow: count is the only thing retained
         tables[(schema, table)] = src.schema
         return local_frame(spark, [(n,)], "rows: bigint")
-    if up0 == "INSERT" and (schema, table) in tables:
+    if verb == "INSERT" and (schema, table) in tables:
         # Positional alignment to the table layout (the reference's
         # INSERT column rule), like dml._insert does for managed tables.
         tgt = tables[(schema, table)]
@@ -343,7 +346,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     new_rows = src.collect()  # memory connector IS driver-resident, like
     # the reference's MemoryPagesStore (worker-memory tables) — small
     # dimension/staging data only, not a 100 TB path.
-    if up0 == "INSERT" and (schema, table) in tables:
+    if verb == "INSERT" and (schema, table) in tables:
         all_rows = spark.table(view).collect() + new_rows
     else:
         all_rows = new_rows
@@ -353,7 +356,7 @@ def try_execute_dml(engine, stripped: str) -> DataFrame | None:
     return local_frame(spark, [(len(new_rows),)], "rows: bigint")
 
 
-def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
+def _file_catalog_dml(engine, mount, stripped: str, m: re.Match, verb: str) -> DataFrame:
     """Write path of the parquet/hive file catalogs (reference: the hive
     connector's HivePageSinkProvider — CTAS creates
     <location>/<schema>/<table>/, INSERT appends files, DROP removes the
@@ -369,7 +372,6 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
     loc = mount["properties"]["location"]
     pdir = os.path.join(loc, schema, table)
     view = f"__cat_{cat}_{schema}_{table}"
-    up0 = stripped.upper().split()[0]
 
     def _read(path):
         reader = spark.read
@@ -407,14 +409,14 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
             spark.catalog.dropTempView(view)
             mount["views"].discard(view)
 
-    if up0 == "DROP":
+    if verb == "DROP":
         if os.path.isdir(pdir):
             shutil.rmtree(pdir)
         elif "IF EXISTS" not in stripped.upper():
             raise ValueError(f"table not found: {cat}.{schema}.{table}")
         _invalidate()
         return local_frame(spark, [(0,)], "rows: bigint")
-    if up0 in ("DELETE", "TRUNCATE"):
+    if verb in ("DELETE", "TRUNCATE"):
         if re.search(r"\bWHERE\b", stripped, re.IGNORECASE):
             raise ValueError(
                 "file catalogs support whole-table DELETE only (row-level "
@@ -437,7 +439,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
         _invalidate()
         return local_frame(spark, [(0,)], "rows: bigint")
     rest = stripped[m.end():].lstrip()
-    if up0 == "CREATE":
+    if verb == "CREATE":
         rest = re.sub(r"^AS\s+", "", rest, flags=re.IGNORECASE)
         if os.path.isdir(pdir):
             if "IF NOT EXISTS" in stripped.upper():
@@ -452,7 +454,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
     from pyspark.sql import functions as F
 
     src = engine.sql(rest)
-    if up0 == "INSERT":
+    if verb == "INSERT":
         tgt = _read(pdir).schema
         if len(src.columns) != len(tgt.fields):
             raise ValueError(
@@ -464,7 +466,7 @@ def _file_catalog_dml(engine, mount, stripped: str, m: re.Match) -> DataFrame:
         )
     obs = Observation()
     src = src.observe(obs, F.count(F.lit(1)).alias("n"))
-    _writer(src).mode("append" if up0 == "INSERT" else "overwrite").save(pdir)
+    _writer(src).mode("append" if verb == "INSERT" else "overwrite").save(pdir)
     _invalidate()
     n = int(obs.get["n"])
     return local_frame(spark, [(n,)], "rows: bigint")
@@ -484,14 +486,21 @@ def _schema_sf(schema: str) -> float:
     raise ValueError(f"tpch connector schema must be tiny or sfN, got: {schema}")
 
 
-def show_catalogs(engine, stripped: str) -> DataFrame:
+def _show_catalogs(engine, stmt) -> DataFrame:
     """SHOW CATALOGS [LIKE pattern] (ShowQueriesRewrite.java): the session
     catalog plus every dynamic mount."""
     names = sorted(["spark", *getattr(engine, "catalogs", {})])
-    m = re.search(r"LIKE\s+'([^']*)'", stripped, re.IGNORECASE)
+    m = re.search(r"LIKE\s+'([^']*)'", stmt.text, re.IGNORECASE)
     if m:
         rx = re.compile(
             "^" + re.escape(m.group(1)).replace("%", ".*").replace("_", ".") + "$"
         )
         names = [n for n in names if rx.match(n)]
     return local_frame(engine.spark, [(n,) for n in names] or [], "catalog: string")
+
+
+HANDLERS = {
+    "CREATE CATALOG": _create_catalog,
+    "DROP CATALOG": _drop_catalog,
+    "SHOW CATALOGS": _show_catalogs,
+}

@@ -73,31 +73,6 @@ def _warehouse_dir() -> str:
     return os.path.join(repo, "spark-warehouse", "dml")
 
 
-def try_execute(engine, sql: str) -> DataFrame | None:
-    """Execute `sql` if it is a DML statement; return None otherwise.
-
-    Returns a one-row ``rows: bigint`` DataFrame (the reference's
-    TableFinishOperator rowcount result, TableFinishOperator.java:55).
-    """
-    stripped = sql.strip().rstrip(";")
-    up = stripped.upper().split()
-    if up[:2] == ["CREATE", "TABLE"] and " AS " in f" {stripped.upper()} ":
-        return _ctas(engine, stripped)
-    if up[:2] == ["DROP", "TABLE"]:
-        return _drop(engine, stripped)
-    if up[:2] == ["TRUNCATE", "TABLE"]:
-        return _truncate(engine, stripped)
-    if up[:2] == ["INSERT", "INTO"]:
-        return _insert(engine, stripped)
-    if up[:2] == ["DELETE", "FROM"]:
-        return _delete(engine, stripped)
-    if up[:1] == ["UPDATE"] and "SET" in up:
-        return _update(engine, stripped)
-    if up[:2] == ["MERGE", "INTO"]:
-        return _merge(engine, stripped)
-    return None
-
-
 # ---------------------------------------------------------------- storage
 
 
@@ -347,7 +322,8 @@ def _translate_fragment(engine, text: str) -> str:
 # ---------------------------------------------------------------- statements
 
 
-def _ctas(engine, sql: str) -> DataFrame:
+def _ctas(engine, stmt) -> DataFrame:
+    sql = stmt.text
     m = re.match(
         rf"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?({_IDENT}(?:\.{_IDENT})*)\s*"
         rf"(WITH\s*\(.*?\)\s*)?AS\s+(.*)$",
@@ -393,7 +369,8 @@ def _parse_with_props(with_txt: str | None) -> list[str] | None:
     return None
 
 
-def _drop(engine, sql: str) -> DataFrame:
+def _drop(engine, stmt) -> DataFrame:
+    sql = stmt.text
     parts = sql.split()
     idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
     name = _norm_name(parts[idx])
@@ -417,14 +394,16 @@ def _drop(engine, sql: str) -> DataFrame:
     return local_frame(engine.spark, [(0,)], "rows: bigint")
 
 
-def _truncate(engine, sql: str) -> DataFrame:
+def _truncate(engine, stmt) -> DataFrame:
+    sql = stmt.text
     name = _norm_name(sql.split()[2])
     df = _read(engine, name)
     _commit(engine, name, df.limit(0), operation="truncate")
     return local_frame(engine.spark, [(0,)], "rows: bigint")
 
 
-def _insert(engine, sql: str) -> DataFrame:
+def _insert(engine, stmt) -> DataFrame:
+    sql = stmt.text
     m = re.match(
         rf"INSERT\s+INTO\s+({_IDENT}(?:\.{_IDENT})*)\s*(\([^)]*\))?\s*(.*)$",
         sql,
@@ -517,7 +496,8 @@ def _affected_partitions(engine, name: str, df: DataFrame, pred):
     return (cond, untouched)
 
 
-def _delete(engine, sql: str) -> DataFrame:
+def _delete(engine, stmt) -> DataFrame:
+    sql = stmt.text
     m = re.match(
         rf"DELETE\s+FROM\s+({_IDENT}(?:\.{_IDENT})*)\s*(?:WHERE\s+(.*))?$",
         sql,
@@ -573,7 +553,8 @@ def _delete(engine, sql: str) -> DataFrame:
     return local_frame(engine.spark, [(before - after,)], "rows: bigint")
 
 
-def _update(engine, sql: str) -> DataFrame:
+def _update(engine, stmt) -> DataFrame:
+    sql = stmt.text
     m = re.match(
         rf"UPDATE\s+({_IDENT}(?:\.{_IDENT})*)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
         sql,
@@ -678,7 +659,7 @@ _WHEN_RE = re.compile(
 )
 
 
-def _merge(engine, sql: str) -> DataFrame:
+def _merge(engine, stmt) -> DataFrame:
     """MERGE INTO via the full-outer-join rewrite (operators/merge.py).
 
     Supported clause shapes (the reference applies clauses first-match-wins,
@@ -690,6 +671,7 @@ def _merge(engine, sql: str) -> DataFrame:
     an unconditional DELETE is rejected (priority would differ from the
     join rewrite's delete-then-update routing).
     """
+    sql = stmt.text
     m = _MERGE_RE.match(sql)
     if not m:
         raise ValueError(f"cannot parse MERGE: {sql[:160]}")
@@ -1121,85 +1103,85 @@ def txn_rollback(engine) -> None:
 # a metastore.
 
 
-def try_execute_ddl(engine, sql: str) -> DataFrame | None:
-    stripped = sql.strip().rstrip(";")
-    up = stripped.upper().split()
-    if up[:2] == ["CREATE", "VIEW"] or up[:4] == ["CREATE", "OR", "REPLACE", "VIEW"]:
-        return _create_view(engine, stripped)
-    if up[:2] == ["DROP", "VIEW"]:
-        parts = stripped.split()
-        idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
-        name = _norm_name(parts[idx])
-        existed = engine.views.pop(name, None) if hasattr(engine, "views") else None
-        if existed is None and idx == 2:
-            raise ValueError(f"view not found: {name}")
-        if existed is not None:
-            engine.spark.catalog.dropTempView(name)
+def _create_table(engine, stmt) -> DataFrame:
+    if " AS " in f" {stmt.text.upper()} ":
+        return _ctas(engine, stmt)
+    return _create_empty_table(engine, stmt)
+
+
+def _drop_view(engine, stmt) -> DataFrame:
+    parts = stmt.text.split()
+    idx = 4 if len(parts) > 4 and parts[2].upper() == "IF" else 2
+    name = _norm_name(parts[idx])
+    existed = engine.views.pop(name, None) if hasattr(engine, "views") else None
+    if existed is None and idx == 2:
+        raise ValueError(f"view not found: {name}")
+    if existed is not None:
+        engine.spark.catalog.dropTempView(name)
+    return local_frame(engine.spark, [(name,)], "view: string")
+
+
+def _show_create_view(engine, stmt) -> DataFrame:
+    name = _norm_name(stmt.text.split()[3])
+    views = getattr(engine, "views", {})
+    if name not in views:
+        raise ValueError(f"view not found: {name}")
+    return local_frame(
+        engine.spark, [(f"CREATE VIEW {name} AS\n{views[name]}",)], "create_view: string"
+    )
+
+
+def _alter_view(engine, stmt) -> DataFrame:
+    # #renameView / #refreshView (grammar SqlBase.g4:130-131).
+    stripped = stmt.text
+    views = getattr(engine, "views", {})
+    m = re.match(
+        r"ALTER\s+VIEW\s+([\w.\"]+)\s+(?:RENAME\s+TO\s+([\w.\"]+)|(REFRESH))\s*$",
+        stripped,
+        re.IGNORECASE,
+    )
+    if not m:
+        raise ValueError(f"cannot parse ALTER VIEW: {stripped[:80]}")
+    name = _norm_name(m.group(1))
+    if name not in views:
+        raise ValueError(f"view not found: {name}")
+    if m.group(3):  # REFRESH: re-resolve the definition against sources
+        engine.sql(views[name]).createOrReplaceTempView(name)
         return local_frame(engine.spark, [(name,)], "view: string")
-    if up[:3] == ["SHOW", "CREATE", "VIEW"]:
-        name = _norm_name(stripped.split()[3])
-        views = getattr(engine, "views", {})
-        if name not in views:
-            raise ValueError(f"view not found: {name}")
-        return local_frame(
-            engine.spark, [(f"CREATE VIEW {name} AS\n{views[name]}",)], "create_view: string"
-        )
-    if up[:2] == ["CREATE", "TABLE"] and " AS " not in f" {stripped.upper()} ":
-        return _create_empty_table(engine, stripped)
-    if up[:2] == ["ALTER", "TABLE"]:
-        return _alter_table(engine, stripped)
-    if up[:2] == ["ALTER", "VIEW"]:
-        # #renameView / #refreshView (grammar SqlBase.g4:130-131).
-        views = getattr(engine, "views", {})
-        m = re.match(
-            r"ALTER\s+VIEW\s+([\w.\"]+)\s+(?:RENAME\s+TO\s+([\w.\"]+)|(REFRESH))\s*$",
-            stripped,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError(f"cannot parse ALTER VIEW: {stripped[:80]}")
-        name = _norm_name(m.group(1))
-        if name not in views:
-            raise ValueError(f"view not found: {name}")
-        if m.group(3):  # REFRESH: re-resolve the definition against sources
-            engine.sql(views[name]).createOrReplaceTempView(name)
-            return local_frame(engine.spark, [(name,)], "view: string")
-        new = _norm_name(m.group(2))
-        views[new] = views.pop(name)
-        engine.spark.catalog.dropTempView(name)
-        engine.sql(views[new]).createOrReplaceTempView(new)
-        refresh_infoschema(engine, changed=new, dropped=name)
-        return local_frame(engine.spark, [(new,)], "view: string")
-    if up[:3] == ["ALTER", "MATERIALIZED", "VIEW"]:
-        # #renameMaterializedView: the stored data moves with the name.
-        m = re.match(
-            r"ALTER\s+MATERIALIZED\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s+RENAME\s+TO\s+([\w.\"]+)\s*$",
-            stripped,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError(f"cannot parse ALTER MATERIALIZED VIEW: {stripped[:80]}")
-        name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
-        if name not in engine.materialized_views:
-            if re.search(r"IF\s+EXISTS", stripped, re.IGNORECASE):
-                return local_frame(engine.spark, [(name,)], "materialized_view: string")
-            raise ValueError(f"materialized view not found: {name}")
-        engine.materialized_views[new] = engine.materialized_views.pop(name)
-        engine._mv_meta[new] = engine._mv_meta.pop(name, {})
-        # MVs materialize under spark-warehouse/mv (engine._mv_refresh),
-        # NOT the DML table dir.
-        mv_dir = os.path.join(os.path.dirname(_warehouse_dir()), "mv")
-        if os.path.isdir(os.path.join(mv_dir, name)):
-            shutil.rmtree(os.path.join(mv_dir, new), ignore_errors=True)
-            os.rename(os.path.join(mv_dir, name), os.path.join(mv_dir, new))
-            engine.spark.read.parquet(os.path.join(mv_dir, new)).createOrReplaceTempView(new)
-        engine.spark.catalog.dropTempView(name)
-        return local_frame(engine.spark, [(new,)], "materialized_view: string")
-    if up[:2] in (["CREATE", "SCHEMA"], ["DROP", "SCHEMA"], ["ALTER", "SCHEMA"]) or up[:3] == [
-        "SHOW", "CREATE", "SCHEMA",
-    ]:
-        return _schema_ddl(engine, stripped, up)
-    return None
+    new = _norm_name(m.group(2))
+    views[new] = views.pop(name)
+    engine.spark.catalog.dropTempView(name)
+    engine.sql(views[new]).createOrReplaceTempView(new)
+    refresh_infoschema(engine, changed=new, dropped=name)
+    return local_frame(engine.spark, [(new,)], "view: string")
+
+
+def _alter_materialized_view(engine, stmt) -> DataFrame:
+    # #renameMaterializedView: the stored data moves with the name.
+    stripped = stmt.text
+    m = re.match(
+        r"ALTER\s+MATERIALIZED\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s+RENAME\s+TO\s+([\w.\"]+)\s*$",
+        stripped,
+        re.IGNORECASE,
+    )
+    if not m:
+        raise ValueError(f"cannot parse ALTER MATERIALIZED VIEW: {stripped[:80]}")
+    name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
+    if name not in engine.materialized_views:
+        if re.search(r"IF\s+EXISTS", stripped, re.IGNORECASE):
+            return local_frame(engine.spark, [(name,)], "materialized_view: string")
+        raise ValueError(f"materialized view not found: {name}")
+    engine.materialized_views[new] = engine.materialized_views.pop(name)
+    engine._mv_meta[new] = engine._mv_meta.pop(name, {})
+    # MVs materialize under spark-warehouse/mv (engine._mv_refresh),
+    # NOT the DML table dir.
+    mv_dir = os.path.join(os.path.dirname(_warehouse_dir()), "mv")
+    if os.path.isdir(os.path.join(mv_dir, name)):
+        shutil.rmtree(os.path.join(mv_dir, new), ignore_errors=True)
+        os.rename(os.path.join(mv_dir, name), os.path.join(mv_dir, new))
+        engine.spark.read.parquet(os.path.join(mv_dir, new)).createOrReplaceTempView(new)
+    engine.spark.catalog.dropTempView(name)
+    return local_frame(engine.spark, [(new,)], "materialized_view: string")
 
 
 def _schemas(engine) -> dict:
@@ -1213,70 +1195,79 @@ def _schemas(engine) -> dict:
     return engine.schemas
 
 
-def _schema_ddl(engine, stripped: str, up: list[str]) -> DataFrame:
+def _show_create_schema(engine, stmt) -> DataFrame:
     reg = _schemas(engine)
-    spark = engine.spark
-    if up[:3] == ["SHOW", "CREATE", "SCHEMA"]:
-        name = _norm_name(stripped.split()[3])
-        if name not in reg:
-            raise ValueError(f"schema not found: {name}")
-        props = ""
-        if reg[name]:
-            kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(reg[name].items()))
-            props = f"\nWITH (\n   {kv}\n)"
-        return local_frame(
-            spark, [(f"CREATE SCHEMA {name}{props}",)], "create_schema: string"
-        )
-    if up[:2] == ["CREATE", "SCHEMA"]:
-        m = re.match(
-            r"CREATE\s+SCHEMA\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"]+)"
-            r"(?:\s+AUTHORIZATION\s+\S+)?(?:\s+WITH\s*\((?P<props>.*)\))?\s*$",
-            stripped,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"cannot parse CREATE SCHEMA: {stripped[:80]}")
-        name = _norm_name(m.group("name"))
-        if name in reg:
-            if m.group("ine"):
-                return local_frame(spark, [(name,)], "schema: string")
-            raise ValueError(f"schema already exists: {name}")
-        reg[name] = {
-            pm.group(1).lower(): pm.group(2)
-            for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", m.group("props") or "")
-        }
-        return local_frame(spark, [(name,)], "schema: string")
-    if up[:2] == ["DROP", "SCHEMA"]:
-        m = re.match(
-            r"DROP\s+SCHEMA\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>[\w.\"]+)(?:\s+(?:CASCADE|RESTRICT))?\s*$",
-            stripped,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise ValueError(f"cannot parse DROP SCHEMA: {stripped[:80]}")
-        name = _norm_name(m.group("name"))
-        if name == "default":
-            raise ValueError("cannot drop the default schema")
-        if name not in reg:
-            if m.group("ie"):
-                return local_frame(spark, [(name,)], "schema: string")
-            raise ValueError(f"schema not found: {name}")
-        reg.pop(name)
-        return local_frame(spark, [(name,)], "schema: string")
-    # ALTER SCHEMA s RENAME TO s2
+    name = _norm_name(stmt.text.split()[3])
+    if name not in reg:
+        raise ValueError(f"schema not found: {name}")
+    props = ""
+    if reg[name]:
+        kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(reg[name].items()))
+        props = f"\nWITH (\n   {kv}\n)"
+    return local_frame(
+        engine.spark, [(f"CREATE SCHEMA {name}{props}",)], "create_schema: string"
+    )
+
+
+def _create_schema(engine, stmt) -> DataFrame:
+    reg = _schemas(engine)
     m = re.match(
-        r"ALTER\s+SCHEMA\s+([\w.\"]+)\s+RENAME\s+TO\s+([\w\"]+)\s*$", stripped, re.IGNORECASE
+        r"CREATE\s+SCHEMA\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"]+)"
+        r"(?:\s+AUTHORIZATION\s+\S+)?(?:\s+WITH\s*\((?P<props>.*)\))?\s*$",
+        stmt.text,
+        re.IGNORECASE | re.DOTALL,
     )
     if not m:
-        raise ValueError(f"cannot parse ALTER SCHEMA: {stripped[:80]}")
+        raise ValueError(f"cannot parse CREATE SCHEMA: {stmt.text[:80]}")
+    name = _norm_name(m.group("name"))
+    if name in reg:
+        if m.group("ine"):
+            return local_frame(engine.spark, [(name,)], "schema: string")
+        raise ValueError(f"schema already exists: {name}")
+    reg[name] = {
+        pm.group(1).lower(): pm.group(2)
+        for pm in re.finditer(r"([\w.]+)\s*=\s*'([^']*)'", m.group("props") or "")
+    }
+    return local_frame(engine.spark, [(name,)], "schema: string")
+
+
+def _drop_schema(engine, stmt) -> DataFrame:
+    reg = _schemas(engine)
+    m = re.match(
+        r"DROP\s+SCHEMA\s+(?P<ie>IF\s+EXISTS\s+)?(?P<name>[\w.\"]+)(?:\s+(?:CASCADE|RESTRICT))?\s*$",
+        stmt.text,
+        re.IGNORECASE,
+    )
+    if not m:
+        raise ValueError(f"cannot parse DROP SCHEMA: {stmt.text[:80]}")
+    name = _norm_name(m.group("name"))
+    if name == "default":
+        raise ValueError("cannot drop the default schema")
+    if name not in reg:
+        if m.group("ie"):
+            return local_frame(engine.spark, [(name,)], "schema: string")
+        raise ValueError(f"schema not found: {name}")
+    reg.pop(name)
+    return local_frame(engine.spark, [(name,)], "schema: string")
+
+
+def _alter_schema(engine, stmt) -> DataFrame:
+    # ALTER SCHEMA s RENAME TO s2
+    reg = _schemas(engine)
+    m = re.match(
+        r"ALTER\s+SCHEMA\s+([\w.\"]+)\s+RENAME\s+TO\s+([\w\"]+)\s*$", stmt.text, re.IGNORECASE
+    )
+    if not m:
+        raise ValueError(f"cannot parse ALTER SCHEMA: {stmt.text[:80]}")
     name, new = _norm_name(m.group(1)), _norm_name(m.group(2))
     if name not in reg:
         raise ValueError(f"schema not found: {name}")
     reg[new] = reg.pop(name)
-    return local_frame(spark, [(new,)], "schema: string")
+    return local_frame(engine.spark, [(new,)], "schema: string")
 
 
-def _create_view(engine, sql: str) -> DataFrame:
+def _create_view(engine, stmt) -> DataFrame:
+    sql = stmt.text
     m = re.match(
         rf"CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+({_IDENT}(?:\.{_IDENT})*)\s+AS\s+(.*)$",
         sql,
@@ -1287,7 +1278,7 @@ def _create_view(engine, sql: str) -> DataFrame:
     name, defn = _norm_name(m.group(1)), m.group(2).strip()
     if not hasattr(engine, "views"):
         engine.views = {}
-    if name in engine.views and "OR REPLACE" not in sql.upper()[:40]:
+    if name in engine.views and stmt.kind != "CREATE OR REPLACE VIEW":
         raise ValueError(f"view already exists: {name}")
     # Lazy logical view: the DataFrame plan re-reads sources at query time
     # (CreateViewTask semantics — definition resolved, data not stored).
@@ -1297,7 +1288,8 @@ def _create_view(engine, sql: str) -> DataFrame:
     return local_frame(engine.spark, [(name,)], "view: string")
 
 
-def _create_empty_table(engine, sql: str) -> DataFrame:
+def _create_empty_table(engine, stmt) -> DataFrame:
+    sql = stmt.text
     m = re.match(
         rf"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?({_IDENT}(?:\.{_IDENT})*)\s*\((.*)\)\s*(?:WITH\s*\(.*\))?\s*$",
         sql,
@@ -1338,7 +1330,8 @@ def _trino_type_to_spark(t: str) -> str:
     return t
 
 
-def _alter_table(engine, sql: str) -> DataFrame:
+def _alter_table(engine, stmt) -> DataFrame:
+    sql = stmt.text
     m = re.match(
         rf"ALTER\s+TABLE\s+({_IDENT}(?:\.{_IDENT})*)\s+(.*)$", sql, re.IGNORECASE | re.DOTALL
     )
@@ -1624,3 +1617,57 @@ def refresh_infoschema(engine, changed: str | None = None, dropped: str | None =
         except Exception:
             cache.pop(changed, None)
     register_information_schema(engine.spark, cache)
+
+
+def _start_transaction(engine, stmt) -> DataFrame:
+    # StartTransactionTask.java: DML is copy-on-write, so the transaction
+    # pins per-table snapshots (txn_*). Access modes are accepted and
+    # ignored (single-session engine).
+    txn_begin(engine)
+    return local_frame(engine.spark, [("STARTED",)], "transaction: string")
+
+
+def _end_transaction(engine, stmt) -> DataFrame:
+    (txn_commit if stmt.kind == "COMMIT" else txn_rollback)(engine)
+    return local_frame(engine.spark, [(stmt.kind,)], "transaction: string")
+
+
+def _mounted_first(write):
+    """A catalog-qualified write target goes to the mounted connector's
+    page-sink path (catalogs.try_execute_dml) before the managed-table
+    path."""
+    from trino_spark.dialect import catalogs
+
+    def run(engine, stmt) -> DataFrame:
+        out = catalogs.try_execute_dml(engine, stmt) if getattr(engine, "catalogs", None) else None
+        return write(engine, stmt) if out is None else out
+
+    return run
+
+
+# DML answers a one-row ``rows: bigint`` frame (the reference's
+# TableFinishOperator rowcount result, TableFinishOperator.java:55); DDL
+# covers logical views, plain CREATE TABLE, column evolution and schemas.
+HANDLERS = {
+    "CREATE TABLE": _mounted_first(_create_table),
+    "DROP TABLE": _mounted_first(_drop),
+    "TRUNCATE TABLE": _mounted_first(_truncate),
+    "INSERT INTO": _mounted_first(_insert),
+    "DELETE FROM": _mounted_first(_delete),
+    "UPDATE": _update,
+    "MERGE INTO": _merge,
+    "CREATE VIEW": _create_view,
+    "CREATE OR REPLACE VIEW": _create_view,
+    "DROP VIEW": _drop_view,
+    "SHOW CREATE VIEW": _show_create_view,
+    "ALTER TABLE": _alter_table,
+    "ALTER VIEW": _alter_view,
+    "ALTER MATERIALIZED VIEW": _alter_materialized_view,
+    "CREATE SCHEMA": _create_schema,
+    "DROP SCHEMA": _drop_schema,
+    "ALTER SCHEMA": _alter_schema,
+    "SHOW CREATE SCHEMA": _show_create_schema,
+    "START TRANSACTION": _start_transaction,
+    "COMMIT": _end_transaction,
+    "ROLLBACK": _end_transaction,
+}

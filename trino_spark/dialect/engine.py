@@ -10,16 +10,26 @@ Tungsten execute. See SURVEY.md §3.1.
 from __future__ import annotations
 
 import re
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 
+from trino_spark import __version__, infoschema
 from trino_spark.catalog import ALL_TABLES, Catalog
+from trino_spark.dialect import access as _access
+from trino_spark.dialect import branches as _branches
+from trino_spark.dialect import catalogs as _catalogs
+from trino_spark.dialect import dml as _dml
+from trino_spark.dialect import prepared as _prep
 from trino_spark.dialect import routines as _routines_mod
+from trino_spark.dialect import statement as _statement
+from trino_spark.dialect.access import map_outside_literals
 from trino_spark.dialect.rewrites import translate
-from trino_spark.infoschema import register_information_schema, rewrite_show
+from trino_spark.dialect.statement import Statement
+from trino_spark.infoschema import register_information_schema, show_columns, show_stats
 from trino_spark.session import local_frame
 
-__all__ = ["TrinoEngine", "translate"]
+__all__ = ["TrinoEngine", "classify", "translate"]
 
 
 class TrinoEngine:
@@ -106,13 +116,15 @@ class TrinoEngine:
             register_geo_functions(spark)
             spark._ts_fns_registered = True
 
-    def sql(self, trino_sql: str) -> DataFrame:
-        """Dispatch a Trino-dialect statement; top-level calls are recorded
-        in the query log served as system.runtime.queries
-        (core/.../connector/system/QuerySystemTable.java role)."""
+    def sql(self, trino_sql: str | Statement) -> DataFrame:
+        """Dispatch a Trino-dialect statement (text, or a Statement from
+        classify); top-level calls are recorded in the query log served as
+        system.runtime.queries (core/.../connector/system/QuerySystemTable.java
+        role)."""
         import time
         import uuid as _uuid
 
+        stmt = trino_sql if isinstance(trino_sql, Statement) else classify(trino_sql)
         depth = getattr(self._tls, "depth", 0)
         self._tls.depth = depth + 1
         if depth == 0:
@@ -125,24 +137,24 @@ class TrinoEngine:
                 "query_created",
                 {
                     "query_id": qid,
-                    "query": trino_sql.strip()[:1000],
+                    "query": stmt.source.strip()[:1000],
                     "user": getattr(self, "session_user", "trino"),
                     "create_time": time.time(),
                 },
             )
         try:
-            out = self._sql_inner(trino_sql)
+            out = self._sql_inner(stmt)
             if depth == 0:
                 dt = time.perf_counter() - t0
-                self._log_query(qid, trino_sql, "FINISHED", dt)
-                self._emit_completed(qid, trino_sql, "FINISHED", dt, None)
+                self._log_query(qid, stmt.source, "FINISHED", dt)
+                self._emit_completed(qid, stmt.source, "FINISHED", dt, None)
             return out
         except Exception as exc:
             if depth == 0:
                 dt = time.perf_counter() - t0
-                self._log_query(qid, trino_sql, "FAILED", dt)
+                self._log_query(qid, stmt.source, "FAILED", dt)
                 self._emit_completed(
-                    qid, trino_sql, "FAILED", dt, str(exc).split("\n")[0][:500]
+                    qid, stmt.source, "FAILED", dt, str(exc).split("\n")[0][:500]
                 )
             raise
         finally:
@@ -216,796 +228,105 @@ class TrinoEngine:
         )
         del log[:-200]  # bounded, like the reference's history window
 
-    @staticmethod
-    def _sub_outside_literals(sql: str, target: str, repl: str) -> str:
-        """Replace `target` only OUTSIDE single-quoted string literals —
-        a raw str.replace would corrupt e.g. SELECT 'system.runtime.nodes'."""
-        from trino_spark.dialect.access import map_outside_literals
+    def _sql_inner(self, stmt: Statement) -> DataFrame:
+        # The rewrites change table references only, never the leading
+        # keywords, so the kind and the tokens stay those of the source.
+        stmt = replace(stmt, text=self._resolve_references(stmt.text))
+        _access.enforce(self, stmt)
+        handler = DISPATCH.get(stmt.kind)
+        out = handler(self, stmt) if handler else None
+        return self._query(stmt.text) if out is None else out
 
-        return map_outside_literals(sql, lambda p: p.replace(target, repl))
-
-    @staticmethod
-    def _first_keyword(sql: str) -> str:
-        """First WORD token of the statement, uppercased — skips leading
-        whitespace, comments, and parentheses, so statement-type dispatch
-        cannot be fooled by '(SELECT ...' or '/* c */ SELECT ...'."""
-        from trino_spark.dialect.tokenizer import tokenize
-
-        for t in tokenize(sql):
-            if t.kind == "WORD":
-                return t.text.upper()
-            if t.kind == "WS" or (t.kind == "SYM" and t.text == "("):
-                continue
-            break
-        return ""
-
-    def _sql_inner(self, trino_sql: str) -> DataFrame:
-        from trino_spark.dialect import prepared as _prep
-
-        if trino_sql.lstrip().startswith(("--", "/*")):
-            # Leading comments would hide the statement kind from the
-            # keyword dispatch and the access checks below.
-            from trino_spark.dialect.tokenizer import tokenize
-
-            toks = tokenize(trino_sql)
-            lead = next((i for i, t in enumerate(toks) if t.kind != "WS"), len(toks))
-            trino_sql = "".join(t.text for t in toks[lead:])
-        if "@" in trino_sql and getattr(self, "dml_tables", None):
+    def _resolve_references(self, sql: str) -> str:
+        """Text rewrites every statement gets before dispatch: branch refs,
+        niladic functions, time travel, catalog mounts, metadata tables and
+        the engine-made system tables."""
+        if "@" in sql and getattr(self, "dml_tables", None):
             # Branch refs t@b (grammar SqlBase.g4:80,221; Iceberg branch
             # semantics): resolve BEFORE time travel so `t@b FOR VERSION
             # AS OF n` pins a snapshot of the branch fork.
-            from trino_spark.dialect import branches as _branches
-
-            trino_sql = _branches.resolve(self, trino_sql)
-        if re.search(r"\bCURRENT_USER\b", trino_sql, re.IGNORECASE):
-            # CURRENT_USER (#currentUser) reflects SET SESSION AUTHORIZATION
-            # — substituted as a literal outside string literals.
-            from trino_spark.dialect.access import map_outside_literals
-
-            _user = getattr(self, "session_user", "trino").replace("'", "''")
-            trino_sql = map_outside_literals(
-                trino_sql,
-                lambda p: re.sub(r"\bCURRENT_USER\b", f"'{_user}'", p, flags=re.IGNORECASE),
-            )
-        if re.search(r"\bversion\s*\(\s*\)", trino_sql, re.IGNORECASE):
-            # version() (#version, ServerInfoResource analog): the engine
-            # release string as a literal, like the reference's scalar.
-            from trino_spark import __version__
-            from trino_spark.dialect.access import map_outside_literals
-
-            trino_sql = map_outside_literals(
-                trino_sql,
-                lambda p: re.sub(
-                    r"\bversion\s*\(\s*\)", f"'{__version__}'", p, flags=re.IGNORECASE
-                ),
-            )
-        if re.search(r"(?<!\.\s)(?<!\.)\bcurrent_schema\b(?!\s*[.(])", trino_sql, re.IGNORECASE):
-            # current_schema niladic: the engine's own USE-tracked schema
-            # (the translate() fallback maps it to current_database() for
-            # raw spark.sql callers)
-            from trino_spark.dialect.access import map_outside_literals
-
-            _sch = getattr(self, "_current_schema", "default")
-            trino_sql = map_outside_literals(
-                trino_sql,
-                lambda p: re.sub(
-                    r"(?<!\.\s)(?<!\.)\bcurrent_schema\b(?!\s*[.(])",
-                    lambda _m: "'" + _sch.replace("'", "''") + "'",
-                    p,
-                    flags=re.IGNORECASE,
-                ),
-            )
-        if re.search(r"\bcurrent_groups\s*\(\s*\)", trino_sql, re.IGNORECASE):
-            # current_groups() (#currentGroups): the identity's group set.
-            # Our session identity model is roles, so the group list is the
-            # active role (empty for the unrestricted owner session).
-            from trino_spark.dialect.access import map_outside_literals
-
-            _role = getattr(self, "_acl", {}).get("current")
-            _lit = (
-                "array('" + _role.replace("'", "''") + "')"
-                if _role
-                else "CAST(array() AS ARRAY<STRING>)"
-            )
-            trino_sql = map_outside_literals(
-                trino_sql,
-                lambda p: re.sub(
-                    # replacement via lambda: a role containing backslashes
-                    # must not be parsed for group references
-                    r"\bcurrent_groups\s*\(\s*\)",
-                    lambda _m: _lit,
-                    p,
-                    flags=re.IGNORECASE,
-                ),
-            )
-        if re.search(r"\bFOR\s+(?:VERSION|TIMESTAMP)\s+AS\s+OF\b", trino_sql, re.IGNORECASE):
+            sql = _branches.resolve(self, sql)
+        for rx, literal in _NILADICS:
+            if rx.search(sql):
+                # replacement via lambda: backslashes in the value (a role
+                # name, say) must not be parsed as group references
+                lit = literal(self)
+                sql = map_outside_literals(sql, lambda p: rx.sub(lambda _m: lit, p))
+        if re.search(r"\bFOR\s+(?:VERSION|TIMESTAMP)\s+AS\s+OF\b", sql, re.IGNORECASE):
             # Time travel (grammar SqlBase.g4 queryPeriod; Iceberg/Delta
             # connector behavior): pin table refs to snapshot versions.
-            from trino_spark.dialect import dml as _dml
-
-            trino_sql = _dml.resolve_time_travel(self, trino_sql)
+            sql = _dml.resolve_time_travel(self, sql)
         if getattr(self, "catalogs", None):
             # Dynamic catalog mounts (CREATE CATALOG; CatalogFactory.java):
             # cat.schema.table refs resolve to lazily-registered views
             # (jdbc mounts resolve natively through Spark's DSv2 catalog).
-            from trino_spark.dialect import catalogs as _cats
-
-            trino_sql = _cats.resolve(self, trino_sql)
+            sql = _catalogs.resolve(self, sql)
         if any(
-            k in trino_sql
+            k in sql
             for k in ("$snapshots", "$history", "$files", "$partitions", "$refs", "$properties")
         ):
             # Iceberg-style metadata tables over the snapshot log / current
             # table directory (SnapshotsTable / HistoryTable / FilesTable /
             # PartitionsTable analogs).
-            from trino_spark.dialect import dml as _dml
-
-            trino_sql = _dml.resolve_metadata_tables(self, trino_sql)
-        if "system.runtime.nodes" in trino_sql:
-            # system.runtime.nodes (NodesSystemTable.java): one coordinator
-            # row in local mode; on a real cluster this would enumerate
-            # executors.
-            sc = self.spark.sparkContext
-            local_frame(
-                self.spark,
-                [(sc.applicationId, sc.master, sc.version, True, "active")],
-                "node_id: string, http_uri: string, node_version: string, coordinator: boolean, state: string",
-            ).createOrReplaceTempView("_system_runtime_nodes")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.runtime.nodes", "_system_runtime_nodes"
-            )
-        for _dotted in ("information_schema.tables", "information_schema.columns"):
-            if _dotted in trino_sql:
+            sql = _dml.resolve_metadata_tables(self, sql)
+        for dotted in ("information_schema.tables", "information_schema.columns"):
+            if dotted in sql:
                 # The catalog loader registers these as flat views
                 # (infoschema.py register_information_schema); dotted SQL
                 # references resolve here (InformationSchemaPageSource).
-                trino_sql = self._sub_outside_literals(
-                    trino_sql, _dotted, _dotted.replace(".", "_")
-                )
-        if "information_schema.views" in trino_sql:
-            # information_schema.views: the engine's logical views + MVs
-            # (InformationSchemaPageSource.java VIEWS table).
-            rows = [(n, d, "VIEW") for n, d in sorted(getattr(self, "views", {}).items())] + [
-                (n, d, "MATERIALIZED VIEW") for n, d in sorted(self.materialized_views.items())
-            ]
-            local_frame(
-                self.spark,
-                rows or [], "table_name: string, view_definition: string, view_type: string"
-            ).createOrReplaceTempView("_information_schema_views")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "information_schema.views", "_information_schema_views"
-            )
-        if "system.runtime.tasks" in trino_sql:
-            # TaskSystemTable.java: live execution tasks. Local mode maps
-            # Spark's active stages — one row per (stage, running tasks).
-            sc = self.spark.sparkContext
-            st = sc.statusTracker()
-            rows = []
-            for sid in st.getActiveStageIds():
-                info = st.getStageInfo(sid)
-                if info:
-                    rows.append(
-                        (
-                            sc.applicationId,
-                            f"stage-{sid}",
-                            "RUNNING",
-                            int(info.numTasks),
-                            int(info.numActiveTasks),
-                            int(info.numCompletedTasks),
-                            int(info.numFailedTasks),
-                        )
-                    )
-            local_frame(
-                self.spark,
-                rows or [],
-                "node_id: string, task_id: string, state: string, splits: int,"
-                " running_splits: int, completed_splits: int, failed_splits: int",
-            ).createOrReplaceTempView("_system_runtime_tasks")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.runtime.tasks", "_system_runtime_tasks"
-            )
-        for _prop_tbl, _props in (
-            ("table_properties", [("format", "varchar", "PARQUET", "File format"),
-                                  ("location", "varchar", "", "Storage location"),
-                                  ("partitioned_by", "array(varchar)", "[]", "Partition columns"),
-                                  ("bucketed_by", "array(varchar)", "[]", "Bucketing columns"),
-                                  ("bucket_count", "integer", "0", "Number of buckets")]),
-            ("schema_properties", [("location", "varchar", "", "Storage location")]),
-            ("column_properties", []),
-            ("analyze_properties", [("columns", "array(varchar)", "[]", "Columns to analyze")]),
-            ("materialized_view_properties", [("storage_schema", "varchar", "", "Storage schema")]),
-        ):
-            key = f"system.metadata.{_prop_tbl}"
-            if key in trino_sql:
-                # {Schema,Table,Column,Analyze,MaterializedView}Properties
-                # SystemTable.java: the property names each catalog accepts
-                rows = [("spark", n, t, d, desc) for n, t, d, desc in _props]
-                local_frame(
-                    self.spark,
-                    rows or [],
-                    "catalog_name: string, property_name: string, type: string,"
-                    " default_value: string, description: string",
-                ).createOrReplaceTempView(f"_system_metadata_{_prop_tbl}")
-                trino_sql = self._sub_outside_literals(
-                    trino_sql, key, f"_system_metadata_{_prop_tbl}"
-                )
-        if "system.metadata.catalogs" in trino_sql:
-            # CatalogSystemTable.java: the session catalog + dynamic mounts
-            rows = [("spark", "spark")] + [
-                (name, mount["connector"])
-                for name, mount in sorted(getattr(self, "catalogs", {}).items())
-            ]
-            local_frame(
-                self.spark, rows, "catalog_name: string, connector_name: string"
-            ).createOrReplaceTempView("_system_metadata_catalogs")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.metadata.catalogs", "_system_metadata_catalogs"
-            )
-        if "system.metadata.materialized_views" in trino_sql:
-            # MaterializedViewSystemTable.java: name/definition/freshness
-            rows = [
-                (
-                    n,
-                    self.materialized_views[n],
-                    self._mv_freshness(n),
-                )
-                for n in sorted(self.materialized_views)
-            ]
-            local_frame(
-                self.spark, rows or [], "name: string, definition: string, freshness: string"
-            ).createOrReplaceTempView("_system_metadata_mvs")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.metadata.materialized_views", "_system_metadata_mvs"
-            )
-        for _jt, _src in (
-            ("system.jdbc.tables",
-             "SELECT 'spark' AS table_cat, table_schema AS table_schem,"
-             " table_name, 'TABLE' AS table_type FROM information_schema_tables"),
-            ("system.jdbc.schemas",
-             "SELECT DISTINCT table_schema AS table_schem, 'spark' AS table_catalog"
-             " FROM information_schema_tables"),
-            ("system.jdbc.columns",
-             "SELECT 'spark' AS table_cat, table_schema AS table_schem,"
-             " table_name, column_name, data_type AS type_name,"
-             " ordinal_position FROM information_schema_columns"),
-            ("system.jdbc.table_types",
-             "SELECT explode(array('TABLE', 'VIEW')) AS table_type"),
-            ("system.jdbc.catalogs", "SELECT 'spark' AS table_cat"),
-        ):
-            if _jt in trino_sql:
-                # the system.jdbc schema (JdbcSystemTables serving JDBC
-                # driver DatabaseMetaData): projected off information_schema
-                view = "_" + _jt.replace(".", "_")
-                self.spark.sql(_src).createOrReplaceTempView(view)
-                trino_sql = self._sub_outside_literals(trino_sql, _jt, view)
-        if "system.jdbc.types" in trino_sql:
-            # JdbcTypesSystemTable (system.jdbc schema serving JDBC driver
-            # metadata): type_name + java.sql.Types DATA_TYPE codes
-            rows = [
-                ("boolean", 16), ("tinyint", -6), ("smallint", 5),
-                ("integer", 4), ("bigint", -5), ("real", 7),
-                ("double", 8), ("decimal", 3), ("varchar", 12),
-                ("char", 1), ("varbinary", -3), ("date", 91),
-                ("time", 92), ("timestamp", 93),
-                ("timestamp with time zone", 2014), ("array", 2003),
-                ("map", 2000), ("row", 2002), ("json", 2000),
-            ]
-            local_frame(
-                self.spark, rows, "type_name: string, data_type: int"
-            ).createOrReplaceTempView("_system_jdbc_types")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.jdbc.types", "_system_jdbc_types"
-            )
-        if "system.runtime.queries" in trino_sql:
-            # system.runtime.queries (QuerySystemTable.java): planning-time
-            # dispatch state per recorded query.
-            rows = list(getattr(self, "_query_log", []))
-            local_frame(
-                self.spark,
-                rows or [],
-                "query_id: string, state: string, user: string, query: string,"
-                " elapsed_ms: double, created: timestamp, started: timestamp,"
-                " `end`: timestamp",
-            ).createOrReplaceTempView("_system_runtime_queries")
-            trino_sql = self._sub_outside_literals(
-                trino_sql, "system.runtime.queries", "_system_runtime_queries"
-            )
-
-        wf = re.match(
-            r"\s*WITH\s+(FUNCTION\s+.*?)\s+(SELECT|VALUES)\b(.*)$",
-            trino_sql,
-            re.IGNORECASE | re.DOTALL,
-        ) if "FUNCTION" in trino_sql.upper()[:20] else None
-        if wf:
-            # Inline SQL routines (grammar SqlBase.g4 queryWith ->
-            # functionSpecification; docs udf/sql): expression-bodied
-            # functions scoped to this one query — parsed with the
-            # CREATE FUNCTION machinery, macro-inlined, then discarded.
-            inline: dict = {}
-            for spec_txt in re.split(r",\s*(?=FUNCTION\b)", wf.group(1), flags=re.IGNORECASE):
-                r = _routines_mod.parse_create_function("CREATE " + spec_txt.strip())
-                if r is None or isinstance(r, _routines_mod.PythonRoutine):
-                    raise ValueError(
-                        "WITH FUNCTION supports expression-bodied SQL routines only"
-                    )
-                inline[r.name] = r
-            query = f"{wf.group(2)}{wf.group(3)}"
-            expanded = _routines_mod.expand(query, {**self.routines, **inline})
-            return self.sql(expanded)
-        prep = _prep.parse_prepare(trino_sql)
-        if prep is not None:
-            name, body = prep
-            self.prepared[name] = body
-            return local_frame(self.spark, [(name.lower(),)], "prepared: string")
-        dealloc = _prep.parse_deallocate(trino_sql)
-        if dealloc is not None:
-            self.prepared.pop(dealloc, None)
-            return local_frame(self.spark, [(dealloc.lower(),)], "prepared: string")
-        imm = _prep.parse_execute_immediate(trino_sql)
-        if imm is not None:
-            stmt, args = imm
-            return self.sql(_prep.bind(stmt, args))
-        execed = _prep.parse_execute(trino_sql)
-        if execed is not None:
-            name, args = execed
-            if name not in self.prepared:
-                raise ValueError(f"prepared statement not found: {name}")
-            return self.sql(_prep.bind(self.prepared[name], args))
-        up0 = trino_sql.upper().split()[:3]
-        if up0 == ["SHOW", "CREATE", "FUNCTION"]:
-            # #showCreateFunction: render the stored definition text.
-            fname = trino_sql.split()[3].strip('"').rstrip(";").lower()
-            src = getattr(self, "_function_sources", {}).get(fname.upper())
-            if src is None:
-                raise ValueError(f"function not found: {fname}")
-            return local_frame(self.spark, [(src,)], "create_function: string")
-        if up0[:2] == ["SET", "PATH"]:
-            # #setPath (SetPathTask.java): recorded; the engine's single
-            # function namespace makes it a session attribute only.
-            self.sql_path = trino_sql.split(None, 2)[2].strip().rstrip(";")
-            return local_frame(self.spark, [(self.sql_path,)], "path: string")
-        routine = _routines_mod.parse_create_function(trino_sql)
-        if routine is not None:
-            if not hasattr(self, "_function_sources"):
-                self._function_sources = {}
-            self._function_sources[routine.name.upper()] = trino_sql.strip().rstrip(";")
-            if isinstance(routine, _routines_mod.PythonRoutine):
-                # Row-interpreted path (loops / LANGUAGE PYTHON): a real UDF.
-                # Spark resolves the registered name during analysis, so no
-                # macro expansion is needed (or possible) for these.
-                self.python_routines[routine.name] = routine
-                self.spark.udf.register(routine.name.lower(), routine.fn, routine.returns)
-            else:
-                self.routines[routine.name] = routine
-            return local_frame(self.spark, [(routine.name.lower(),)], "function: string")
-        dropped = _routines_mod.parse_drop_function(trino_sql)
-        if dropped is not None:
-            self.routines.pop(dropped, None)
-            self.python_routines.pop(dropped, None)
-            getattr(self, "_function_sources", {}).pop(dropped.upper(), None)
-            return local_frame(self.spark, [(dropped.lower(),)], "function: string")
-        stripped = trino_sql.strip().rstrip(";")
-        up = stripped.upper().split()
-        # Access control + comments (AccessControl SPI / CommentTask.java):
-        # role statements handled here; every other statement is checked
-        # against the active role's grants before dispatch.
-        from trino_spark.dialect import access as _access
-
-        acl_out = _access.try_execute(self, stripped)
-        if acl_out is None and up[:1] == ["CALL"]:
-            acl_out = _access.try_execute_call(self, stripped)
-        if acl_out is not None:
-            return acl_out
-        _access.enforce(self, stripped)
-        if self._first_keyword(stripped) in ("SELECT", "WITH", "VALUES", "TABLE"):
-            # Row filters / column masks (ConnectorAccessControl
-            # getRowFilters/getColumnMasks): reads under an active role see
-            # secured views. DML reads recurse through this dispatch, so
-            # their SELECT halves are covered too. Detection is token-based
-            # — a leading '(', comment, or whitespace must not let a read
-            # bypass the security rewrite.
-            trino_sql = stripped = _access.apply_security(self, stripped)
-        if (up and up[0] in ("CREATE", "DROP", "ALTER") and "BRANCH" in up[:4]) or up[:2] == ["SHOW", "BRANCHES"]:
-            # Branch statements (grammar #createBranch/#dropBranch/
-            # #fastForwardBranch/#showBranches): write-audit-publish over
-            # the snapshot log.
-            from trino_spark.dialect import branches as _branches
-
-            br_out = _branches.try_execute(self, stripped)
-            if br_out is not None:
-                return br_out
-        if up[:1] in (["INSERT"], ["DELETE"], ["UPDATE"], ["MERGE"], ["TRUNCATE"], ["ALTER"]) or (
-            up[:2]
-            in (
-                ["CREATE", "TABLE"],
-                ["DROP", "TABLE"],
-                ["CREATE", "VIEW"],
-                ["DROP", "VIEW"],
-                ["CREATE", "SCHEMA"],
-                ["DROP", "SCHEMA"],
-            )
-            or up[:3]
-            in (
-                ["CREATE", "OR", "REPLACE"],
-                ["SHOW", "CREATE", "VIEW"],
-                ["SHOW", "CREATE", "SCHEMA"],
-            )
-        ):
-            # DML/DDL entry point (SURVEY §3.3): copy-on-write managed
-            # tables, logical views, column evolution. Catalog-qualified
-            # targets route to the mounted connector's page-sink analog
-            # (memory stores, blackhole swallows) first.
-            from trino_spark.dialect import dml as _dml
-
-            if getattr(self, "catalogs", None):
-                from trino_spark.dialect import catalogs as _cats
-
-                cat_dml = _cats.try_execute_dml(self, stripped)
-                if cat_dml is not None:
-                    return cat_dml
-            dml_out = _dml.try_execute(self, stripped)
-            if dml_out is None:
-                dml_out = _dml.try_execute_ddl(self, stripped)
-            if dml_out is not None:
-                return dml_out
-        if up[:3] == ["CREATE", "MATERIALIZED", "VIEW"] or up[:5] == [
-            "CREATE", "OR", "REPLACE", "MATERIALIZED", "VIEW",
-        ]:
-            skip = 3 if up[1] == "MATERIALIZED" else 5
-            rest = stripped.split(None, skip)[skip]
-            name, _, defn = rest.partition(" AS ") if " AS " in rest else rest.partition(" as ")
-            name = name.strip().strip('"').split(".")[-1].lower()
-            if not defn.strip():
-                raise ValueError(f"CREATE MATERIALIZED VIEW {name}: missing AS <query>")
-            self.materialized_views[name] = defn.strip()
-            self._mv_refresh(name)
-            return local_frame(self.spark, [(name,)], "materialized_view: string")
-        if up[:3] == ["REFRESH", "MATERIALIZED", "VIEW"]:
-            name = stripped.split()[3].strip('"').split(".")[-1].lower()
-            if name not in self.materialized_views:
-                raise ValueError(f"materialized view not found: {name}")
-            n = self._mv_refresh(name)
-            return local_frame(self.spark, [(name, n)], "materialized_view: string, rows: bigint")
-        if up[:3] == ["DROP", "MATERIALIZED", "VIEW"]:
-            parts = stripped.split()
-            idx = 5 if len(parts) > 5 and parts[3].upper() == "IF" else 3
-            name = parts[idx].strip('"').split(".")[-1].lower()
-            self.materialized_views.pop(name, None)
-            self._mv_meta.pop(name, None)
-            self.spark.catalog.dropTempView(name)
-            return local_frame(self.spark, [(name,)], "materialized_view: string")
-        if up[:2] == ["SHOW", "SCHEMAS"] and getattr(self, "schemas", None):
-            # CREATE SCHEMA-registered schemas union the table namespace
-            # (#showSchemas; the flat namespace maps to 'default').
-            rows = sorted(set(self.schemas) | {"default"})
-            return local_frame(self.spark, [(s,) for s in rows], "schema_name: string")
-        if up[:2] == ["SHOW", "CATALOGS"]:
-            # Session catalog + dynamic mounts (ShowQueriesRewrite.java).
-            from trino_spark.dialect import catalogs as _cats
-
-            return _cats.show_catalogs(self, stripped)
-        if up[:2] in (["CREATE", "CATALOG"], ["DROP", "CATALOG"]):
-            # Dynamic catalogs (grammar SqlBase.g4 #createCatalog /
-            # #dropCatalog; CreateCatalogTask.java via CatalogFactory).
-            from trino_spark.dialect import catalogs as _cats
-
-            cat_out = _cats.try_execute(self, stripped)
-            if cat_out is not None:
-                return cat_out
-        if up[:2] == ["SHOW", "SESSION"]:
-            # SET SESSION properties recorded on this engine
-            # (SystemSessionProperties.java surface).
-            rows = sorted(self.session_properties.items())
-            return local_frame(self.spark, rows or [], "name: string, value: string")
-        if up[:2] == ["SHOW", "FUNCTIONS"]:
-            # SHOW FUNCTIONS (ShowQueriesRewrite.java): the engine's
-            # function inventory — dialect-mapped Trino names plus every
-            # user-registered routine. Spark-native passthrough names
-            # (shared spellings like abs/concat/sum) are not enumerated.
-            from trino_spark.dialect import rewrites as _rw
-
-            udfs = sorted(
-                f.name
-                for f in self.spark.catalog.listFunctions()
-                # Spark marks builtins isTemporary too; they resolve to
-                # catalyst expression classes, while session-registered
-                # UDFs carry an UDFRegistration/UserDefined class or none.
-                if f.isTemporary
-                and "." not in f.name
-                # dialect-internal registrations (e.g. the bounded
-                # __spatial_partitioning_sampled twins) are not part of
-                # the user-facing inventory
-                and not f.name.startswith("__")
-                and not (f.className or "").startswith(
-                    ("org.apache.spark.sql.catalyst.", "org.apache.spark.sql.execution.")
-                )
-            )
-            rows = (
-                [(n, "scalar", "dialect-rename") for n in sorted(_rw._RENAME)]
-                + [(n, "scalar", "dialect-template") for n in sorted(_rw._TEMPLATE)]
-                + [(n, "scalar", "registered-udf") for n in udfs]
-                + [(n.lower(), "routine", "sql") for n in sorted(self.routines)]
-                + [(n.lower(), "routine", "python") for n in sorted(self.python_routines)]
-            )
-            return local_frame(
-                self.spark, rows, "function_name: string, kind: string, source: string"
-            )
-        if up[:3] == ["SHOW", "MATERIALIZED", "VIEWS"]:
-            # Freshness surface of system.metadata.materialized_views
-            # (MaterializedViewSystemTable.java): FRESH iff every source
-            # table's on-disk fingerprint still matches the one captured at
-            # refresh; UNKNOWN for non-filesystem sources (e.g. jdbc).
-            rows = [
-                (n, self._mv_freshness(n), self._mv_meta[n]["last_fresh_time"])
-                for n in sorted(self.materialized_views)
-            ]
-            return local_frame(
-                self.spark, rows or [], "name: string, freshness: string, last_fresh_time: string"
-            )
-        if up[:1] == ["EXPLAIN"]:
-            # EXPLAIN [ANALYZE] [(TYPE ...)] <stmt> (ExplainRewrite.java):
-            # returns the rendered plan as a one-column relation. TYPE maps
-            # onto Spark's explain modes: LOGICAL -> extended (analyzed +
-            # optimized logical), DISTRIBUTED -> formatted physical (stage/
-            # exchange structure), VALIDATE -> analysis only, IO -> scanned
-            # relations summary.
-            rest = stripped.split(None, 1)[1]
-            mode = "formatted"
-            fmt = "TEXT"
-            import re as _re2
-
-            tm = _re2.match(
-                r"\(\s*((?:(?:TYPE|FORMAT)\s+\w+\s*,?\s*)+)\)\s*(.*)$",
-                rest,
-                _re2.IGNORECASE | _re2.DOTALL,
-            )
-            if tm:
-                opts = {
-                    k.upper(): v.upper()
-                    for k, v in _re2.findall(
-                        r"(TYPE|FORMAT)\s+(\w+)", tm.group(1), _re2.IGNORECASE
-                    )
-                }
-                rest = tm.group(2)
-                fmt = opts.get("FORMAT", "TEXT")
-                if fmt not in ("TEXT", "JSON"):
-                    raise ValueError(f"EXPLAIN (FORMAT {fmt}) not supported")
-                ttype = opts.get("TYPE", "DISTRIBUTED")
-                mode = {
-                    "LOGICAL": "extended",
-                    "DISTRIBUTED": "formatted",
-                    "VALIDATE": "validate",
-                    "IO": "io",
-                }.get(ttype)
-                if mode is None:
-                    raise ValueError(f"EXPLAIN (TYPE {ttype}) not supported")
-                if fmt == "JSON" and mode in ("validate",):
-                    raise ValueError("EXPLAIN (FORMAT JSON) supports TYPE LOGICAL/DISTRIBUTED/IO")
-            if fmt == "JSON" and up[1:2] != ["ANALYZE"] and mode != "validate":
-                # ExplainRewrite's JSON rendering: emit Spark's own plan
-                # JSON (TreeNode.toJSON) for the requested plan level
-                df = self.sql(rest)
-                qe = df._jdf.queryExecution()
-                if mode == "extended":
-                    text = qe.optimizedPlan().toJSON()
-                elif mode == "io":
-                    import json as _json
-
-                    plan = qe.optimizedPlan().toString()
-                    rels = sorted(set(_re2.findall(r"FileScan \S+|Relation \[[^\]]*\] \w+", plan)))
-                    text = _json.dumps({"inputTableColumnInfos": rels})
+                flat = dotted.replace(".", "_")
+                sql = map_outside_literals(sql, lambda p: p.replace(dotted, flat))
+        for dotted, source in _SYSTEM_TABLES.items():
+            if dotted in sql:
+                view = "_" + dotted.replace(".", "_")
+                if isinstance(source, str):
+                    self.spark.sql(source).createOrReplaceTempView(view)
                 else:
-                    text = qe.executedPlan().toJSON()
-                return local_frame(self.spark, [(text,)], "query_plan: string")
-            if up[1:2] == ["ANALYZE"]:
-                text = self.explain_analyze(rest.split(None, 1)[1])
-            elif mode == "validate":
-                self.sql(rest).schema  # analysis only; no execution
-                text = "VALID"
-            elif mode == "io":
-                df = self.sql(rest)
-                plan = df._jdf.queryExecution().optimizedPlan().toString()
-                import re as _re3
+                    schema, rows = source
+                    local_frame(self.spark, rows(self), schema).createOrReplaceTempView(view)
+                # outside string literals only: SELECT 'system.runtime.nodes'
+                # keeps its text
+                sql = map_outside_literals(sql, lambda p: p.replace(dotted, view))
+        return sql
 
-                rels = sorted(set(_re3.findall(r"Relation \[[^\]]*\] \w+|FileScan \S+", plan))) or [
-                    ln.strip() for ln in plan.splitlines() if "Relation" in ln
-                ]
-                text = "\n".join(rels) if rels else plan
-            else:
-                text = self.explain(rest, mode=mode)
-            return local_frame(self.spark, [(text,)], "query_plan: string")
-        if up[:1] == ["DESCRIBE"] and len(up) == 2:
-            # DESCRIBE <table> == SHOW COLUMNS FROM <table> (the reference
-            # rewrites it the same way, ShowQueriesRewrite.java).
-            shown = rewrite_show(f"SHOW COLUMNS FROM {stripped.split()[1]}")
-            return self.spark.sql(shown)
-        if up[:3] == ["SET", "TIME", "ZONE"]:
-            # SET TIME ZONE (grammar SqlBase.g4; SetTimeZoneTask.java):
-            # maps onto Spark's session timezone, which drives timestamp
-            # rendering and AT TIME ZONE defaults. LOCAL restores UTC
-            # (this engine's canonical zone, session.py).
-            arg = stripped.split(None, 3)[3].strip()
-            zone = "UTC" if arg.upper() == "LOCAL" else arg.strip("'")
-            self.spark.conf.set("spark.sql.session.timeZone", zone)
-            return local_frame(self.spark, [(zone,)], "time_zone: string")
-        if up[:1] == ["USE"] and len(up) == 2:
-            # USE catalog.schema (UseTask.java): single-catalog engine —
-            # record the default schema; unqualified names already resolve
-            # against the session catalog.
-            self._current_schema = stripped.split()[1].strip('"')
-            return local_frame(self.spark, [(self._current_schema,)], "schema: string")
-        if up[:3] == ["SET", "SESSION", "AUTHORIZATION"]:
-            # #setSessionAuthorization (SetSessionAuthorizationTask.java):
-            # switch the session identity; CURRENT_USER reflects it.
-            # Impersonation requires a privilege in the reference
-            # (checkCanSetUser) — a restricted role must not sidestep
-            # CURRENT_USER-based row filters/masks by switching identity,
-            # so deny under any active restricted role (the same owner
-            # gate as CREATE/DROP CATALOG).
-            from trino_spark.dialect import access as _access
+    def _read(self, stmt: Statement) -> DataFrame:
+        # Row filters / column masks (ConnectorAccessControl
+        # getRowFilters/getColumnMasks): reads under an active role see
+        # secured views. DML reads recurse through this dispatch, so
+        # their SELECT halves are covered too.
+        return self._query(_access.apply_security(self, stmt.text))
 
-            if _access._state(self)["current"] is not None:
-                raise _access.AccessDenied(
-                    "Access Denied: SET SESSION AUTHORIZATION requires an owner session"
-                )
-            user = stripped.split(None, 3)[3].strip().strip("'\"")
-            self.session_user = user
-            return local_frame(self.spark, [(user,)], "user: string")
-        if up[:3] == ["RESET", "SESSION", "AUTHORIZATION"]:
-            self.session_user = "trino"
-            return local_frame(self.spark, [("trino",)], "user: string")
-        if up[:2] == ["SET", "SESSION"]:
-            # SET SESSION k = v (SystemSessionProperties.java surface):
-            # recorded per-engine; spark.* keys pass through to the conf.
-            key, _, val = stripped.split(None, 2)[2].partition("=")
-            key, val = key.strip(), val.strip().strip("'")
-            self.session_properties[key] = val
-            if key.startswith("spark."):
-                self.spark.conf.set(key, val)
-            return local_frame(self.spark, [(key, val)], "name: string, value: string")
-        if up[:2] == ["RESET", "SESSION"]:
-            key = stripped.split()[2]
-            self.session_properties.pop(key, None)
-            if key.startswith("spark."):
-                self.spark.conf.unset(key)
-            return local_frame(self.spark, [(key,)], "name: string")
-        if up[:2] == ["START", "TRANSACTION"]:
-            # Transaction statements (StartTransactionTask.java): DML is
-            # copy-on-write, so the transaction pins per-table snapshots
-            # (dialect/dml.py txn_*). Access modes are accepted and ignored
-            # (single-session engine).
-            from trino_spark.dialect import dml as _dml
-
-            _dml.txn_begin(self)
-            return local_frame(self.spark, [("STARTED",)], "transaction: string")
-        if up[:1] in (["COMMIT"], ["ROLLBACK"]):
-            from trino_spark.dialect import dml as _dml
-
-            if up[0] == "COMMIT":
-                _dml.txn_commit(self)
-            else:
-                _dml.txn_rollback(self)
-            return local_frame(self.spark, [(up[0],)], "transaction: string")
-        if up[:3] == ["SHOW", "CREATE", "TABLE"]:
-            # SHOW CREATE TABLE (ShowQueriesRewrite.java): rendered DDL.
-            name = stripped.split()[3].strip('"').split(".")[-1].lower()
-            cols = ",\n   ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in self.spark.table(name).schema.fields
-            )
-            src = self.catalog._sources.get(name)
-            dml_path = getattr(self, "dml_tables", {}).get(name)
-            extra = getattr(self, "_table_properties", {}).get(name, {})
-            extra_txt = "".join(f",\n   {k} = '{v}'" for k, v in sorted(extra.items()))
-            if dml_path:
-                with_props = f"\nWITH (\n   format = 'PARQUET',\n   location = '{dml_path}'{extra_txt}\n)"
-            elif src is not None:
-                with_props = f"\nWITH (\n   format = '{src.format.upper()}',\n   location = '{src.path}'{extra_txt}\n)"
-            elif extra:
-                kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(extra.items()))
-                with_props = f"\nWITH (\n   {kv}\n)"
-            else:
-                with_props = ""
-            ddl = f"CREATE TABLE {name} (\n   {cols}\n){with_props}"
-            return local_frame(self.spark, [(ddl,)], "create_table: string")
-        if up[:3] == ["SHOW", "CREATE", "MATERIALIZED"]:
-            name = stripped.split()[4].strip('"').split(".")[-1].lower()
-            if name not in self.materialized_views:
-                raise ValueError(f"materialized view not found: {name}")
-            ddl = f"CREATE MATERIALIZED VIEW {name} AS\n{self.materialized_views[name]}"
-            return local_frame(self.spark, [(ddl,)], "create_materialized_view: string")
-        if up[:3] == ["SHOW", "STATS", "FOR"]:
-            from trino_spark.infoschema import show_stats
-
-            target = stripped.split(None, 3)[3].strip()
-            if target.startswith("("):
-                # #showStatsForQuery (ShowStatsRewrite.java handles both
-                # forms): compute the stats shape over the query result.
-                inner = target.strip()[1:-1] if target.endswith(")") else target[1:]
-                import os as _os
-
-                view = f"_show_stats_q_{_os.getpid()}"
-                self.sql(inner).createOrReplaceTempView(view)
-                return show_stats(self.spark, view)
-            return show_stats(
-                self.spark,
-                target.strip('"'),
-                cache=getattr(self, "_stats_cache", None),
-            )
-        if up[:1] == ["ANALYZE"] and len(up) >= 2:
-            # ANALYZE <table> (grammar SqlBase.g4; AnalyzeTask.java +
-            # connector collectStatistics): run the one-pass stats
-            # aggregation now and persist it on the engine — subsequent
-            # SHOW STATS serve the collected statistics without a scan.
-            from trino_spark.infoschema import show_stats
-
-            cache = getattr(self, "_stats_cache", None)
-            if cache is None:
-                cache = self._stats_cache = {}
-            tbl = stripped.split()[1].strip('"').split(".")[-1].lower()
-            cache.pop(tbl, None)
-            n = show_stats(self.spark, tbl, cache=cache, populate=True).where(
-                "column_name IS NULL"
-            ).collect()[0].row_count
-            return local_frame(self.spark, [(tbl, int(n or 0))], "table_name: string, rows: bigint")
-        if up[:2] == ["DESCRIBE", "OUTPUT"] and len(up) == 3:
-            name = up[2]
-            if name not in self.prepared:
-                raise ValueError(f"prepared statement not found: {name}")
-            from trino_spark.dialect import prepared as _p
-
-            toks = _p.tokenize(self.prepared[name])
-            n = sum(1 for t in toks if t.is_sym("?"))
-            bound = _p.bind(self.prepared[name], ["NULL"] * n)
-            schema = self.spark.sql(translate(bound)).schema
-            return local_frame(
-                self.spark,
-                [(f.name, f.dataType.simpleString()) for f in schema],
-                "column_name string, type string",
-            )
-        if up[:2] == ["DESCRIBE", "INPUT"] and len(up) == 3:
-            name = up[2]
-            if name not in self.prepared:
-                raise ValueError(f"prepared statement not found: {name}")
-            from trino_spark.dialect import prepared as _p
-
-            n = sum(1 for t in _p.tokenize(self.prepared[name]) if t.is_sym("?"))
-            return local_frame(
-                self.spark, [(i, "unknown") for i in range(n)], "position int, type string"
-            )
-        shown = rewrite_show(trino_sql)
-        if shown is not None:
-            return self.spark.sql(shown)
-        import re as _re
-
-        if _re.search(r"\bJSON_TABLE\s*\(", stripped, _re.IGNORECASE):
+    def _query(self, sql: str) -> DataFrame:
+        """A statement the dispatch table does not take: dialect-translate
+        it and hand it to Spark."""
+        if re.search(r"\bJSON_TABLE\s*\(", sql, re.IGNORECASE):
             # JSON_TABLE clause (grammar SqlBase.g4; operator
             # main/operator/table/json/): execute on the json_table
             # operator, substitute a temp view, re-dispatch.
             from trino_spark.dialect import json_table_sql as _jtsql
 
-            jt_out = _jtsql.try_rewrite(self, stripped)
+            jt_out = _jtsql.try_rewrite(self, sql)
             if jt_out is not None:
                 return jt_out
-        if _re.search(r"\bMATCH_RECOGNIZE\b", stripped, _re.IGNORECASE):
+        if re.search(r"\bMATCH_RECOGNIZE\b", sql, re.IGNORECASE):
             # Row-pattern recognition (grammar SqlBase.g4:448): execute the
             # block on the NFA operator, substitute a temp view, re-dispatch.
             from trino_spark.dialect import match_recognize_sql as _mrsql
 
-            out = _mrsql.try_rewrite(self, stripped)
+            out = _mrsql.try_rewrite(self, sql)
             if out is not None:
                 return out
-        if _re.search(r"\bWINDOW\b", stripped, _re.IGNORECASE) and _re.search(
-            r"\bPATTERN\s*\(", stripped, _re.IGNORECASE
+        if re.search(r"\bWINDOW\b", sql, re.IGNORECASE) and re.search(
+            r"\bPATTERN\s*\(", sql, re.IGNORECASE
         ):
             # Row-pattern recognition in WINDOW (docs
             # pattern-recognition-in-window.md): per-row anchored match.
             from trino_spark.dialect import match_recognize_sql as _mrsql
 
-            out = _mrsql.try_rewrite_window(self, stripped)
+            out = _mrsql.try_rewrite_window(self, sql)
             if out is not None:
                 return out
-        expanded = _routines_mod.expand(trino_sql, self.routines)
+        expanded = _routines_mod.expand(sql, self.routines)
         spark_sql = translate(expanded)
         if spark_sql.lstrip()[:4].upper() == "WITH":
             # Reused-CTE materialization (Trino CTE materialization / FTE
@@ -1019,6 +340,391 @@ class TrinoEngine:
         if "__rk" in df.columns:
             df = df.drop("__rk")
         return df
+
+    # ---- handlers of the dispatch table: (engine, Statement) -> DataFrame,
+    # or None to hand the statement to _query
+
+    def _with_function(self, stmt: Statement) -> DataFrame:
+        # Inline SQL routines (grammar SqlBase.g4 queryWith ->
+        # functionSpecification; docs udf/sql): expression-bodied
+        # functions scoped to this one query — parsed with the
+        # CREATE FUNCTION machinery, macro-inlined, then discarded.
+        wf = re.match(
+            r"\s*WITH\s+(FUNCTION\s+.*?)\s+(SELECT|VALUES)\b(.*)$",
+            stmt.text,
+            re.IGNORECASE | re.DOTALL,
+        )
+        if not wf:
+            return self._read(stmt)
+        inline: dict = {}
+        for spec_txt in re.split(r",\s*(?=FUNCTION\b)", wf.group(1), flags=re.IGNORECASE):
+            r = _routines_mod.parse_create_function("CREATE " + spec_txt.strip())
+            if r is None or isinstance(r, _routines_mod.PythonRoutine):
+                raise ValueError(
+                    "WITH FUNCTION supports expression-bodied SQL routines only"
+                )
+            inline[r.name] = r
+        query = f"{wf.group(2)}{wf.group(3)}"
+        expanded = _routines_mod.expand(query, {**self.routines, **inline})
+        return self.sql(expanded)
+
+    def _prepare(self, stmt: Statement) -> DataFrame:
+        name, body = _prep.parse_prepare(stmt.text)
+        self.prepared[name] = body
+        return local_frame(self.spark, [(name.lower(),)], "prepared: string")
+
+    def _deallocate(self, stmt: Statement) -> DataFrame:
+        name = _prep.parse_deallocate(stmt.text)
+        self.prepared.pop(name, None)
+        return local_frame(self.spark, [(name.lower(),)], "prepared: string")
+
+    def _execute_immediate(self, stmt: Statement) -> DataFrame:
+        text, args = _prep.parse_execute_immediate(stmt.text)
+        return self.sql(_prep.bind(text, args))
+
+    def _execute(self, stmt: Statement) -> DataFrame:
+        name, args = _prep.parse_execute(stmt.text)
+        if name not in self.prepared:
+            raise ValueError(f"prepared statement not found: {name}")
+        return self.sql(_prep.bind(self.prepared[name], args))
+
+    def _show_create_function(self, stmt: Statement) -> DataFrame:
+        # #showCreateFunction: render the stored definition text.
+        fname = stmt.text.split()[3].strip('"').lower()
+        src = getattr(self, "_function_sources", {}).get(fname.upper())
+        if src is None:
+            raise ValueError(f"function not found: {fname}")
+        return local_frame(self.spark, [(src,)], "create_function: string")
+
+    def _set_path(self, stmt: Statement) -> DataFrame:
+        # #setPath (SetPathTask.java): recorded; the engine's single
+        # function namespace makes it a session attribute only.
+        self.sql_path = stmt.text.split(None, 2)[2].strip()
+        return local_frame(self.spark, [(self.sql_path,)], "path: string")
+
+    def _create_function(self, stmt: Statement) -> DataFrame:
+        routine = _routines_mod.parse_create_function(stmt.text)
+        if not hasattr(self, "_function_sources"):
+            self._function_sources = {}
+        self._function_sources[routine.name.upper()] = stmt.text
+        if isinstance(routine, _routines_mod.PythonRoutine):
+            # Row-interpreted path (loops / LANGUAGE PYTHON): a real UDF.
+            # Spark resolves the registered name during analysis, so no
+            # macro expansion is needed (or possible) for these.
+            self.python_routines[routine.name] = routine
+            self.spark.udf.register(routine.name.lower(), routine.fn, routine.returns)
+        else:
+            self.routines[routine.name] = routine
+        return local_frame(self.spark, [(routine.name.lower(),)], "function: string")
+
+    def _drop_function(self, stmt: Statement) -> DataFrame:
+        dropped = _routines_mod.parse_drop_function(stmt.text)
+        self.routines.pop(dropped, None)
+        self.python_routines.pop(dropped, None)
+        getattr(self, "_function_sources", {}).pop(dropped.upper(), None)
+        return local_frame(self.spark, [(dropped.lower(),)], "function: string")
+
+    def _create_materialized_view(self, stmt: Statement) -> DataFrame:
+        skip = len(stmt.kind.split())
+        rest = stmt.text.split(None, skip)[skip]
+        name, _, defn = rest.partition(" AS ") if " AS " in rest else rest.partition(" as ")
+        name = name.strip().strip('"').split(".")[-1].lower()
+        if not defn.strip():
+            raise ValueError(f"CREATE MATERIALIZED VIEW {name}: missing AS <query>")
+        self.materialized_views[name] = defn.strip()
+        self._mv_refresh(name)
+        return local_frame(self.spark, [(name,)], "materialized_view: string")
+
+    def _refresh_materialized_view(self, stmt: Statement) -> DataFrame:
+        name = stmt.text.split()[3].strip('"').split(".")[-1].lower()
+        if name not in self.materialized_views:
+            raise ValueError(f"materialized view not found: {name}")
+        n = self._mv_refresh(name)
+        return local_frame(self.spark, [(name, n)], "materialized_view: string, rows: bigint")
+
+    def _drop_materialized_view(self, stmt: Statement) -> DataFrame:
+        parts = stmt.text.split()
+        idx = 5 if len(parts) > 5 and parts[3].upper() == "IF" else 3
+        name = parts[idx].strip('"').split(".")[-1].lower()
+        self.materialized_views.pop(name, None)
+        self._mv_meta.pop(name, None)
+        self.spark.catalog.dropTempView(name)
+        return local_frame(self.spark, [(name,)], "materialized_view: string")
+
+    def _show_session(self, stmt: Statement) -> DataFrame:
+        # SET SESSION properties recorded on this engine
+        # (SystemSessionProperties.java surface).
+        rows = sorted(self.session_properties.items())
+        return local_frame(self.spark, rows or [], "name: string, value: string")
+
+    def _show_functions(self, stmt: Statement) -> DataFrame:
+        # SHOW FUNCTIONS (ShowQueriesRewrite.java): the engine's
+        # function inventory — dialect-mapped Trino names plus every
+        # user-registered routine. Spark-native passthrough names
+        # (shared spellings like abs/concat/sum) are not enumerated.
+        from trino_spark.dialect import rewrites as _rw
+
+        udfs = sorted(
+            f.name
+            for f in self.spark.catalog.listFunctions()
+            # Spark marks builtins isTemporary too; they resolve to
+            # catalyst expression classes, while session-registered
+            # UDFs carry an UDFRegistration/UserDefined class or none.
+            if f.isTemporary
+            and "." not in f.name
+            # dialect-internal registrations (e.g. the bounded
+            # __spatial_partitioning_sampled twins) are not part of
+            # the user-facing inventory
+            and not f.name.startswith("__")
+            and not (f.className or "").startswith(
+                ("org.apache.spark.sql.catalyst.", "org.apache.spark.sql.execution.")
+            )
+        )
+        rows = (
+            [(n, "scalar", "dialect-rename") for n in sorted(_rw._RENAME)]
+            + [(n, "scalar", "dialect-template") for n in sorted(_rw._TEMPLATE)]
+            + [(n, "scalar", "registered-udf") for n in udfs]
+            + [(n.lower(), "routine", "sql") for n in sorted(self.routines)]
+            + [(n.lower(), "routine", "python") for n in sorted(self.python_routines)]
+        )
+        return local_frame(
+            self.spark, rows, "function_name: string, kind: string, source: string"
+        )
+
+    def _show_materialized_views(self, stmt: Statement) -> DataFrame:
+        # Freshness surface of system.metadata.materialized_views
+        # (MaterializedViewSystemTable.java): FRESH iff every source
+        # table's on-disk fingerprint still matches the one captured at
+        # refresh; UNKNOWN for non-filesystem sources (e.g. jdbc).
+        rows = [
+            (n, self._mv_freshness(n), self._mv_meta[n]["last_fresh_time"])
+            for n in sorted(self.materialized_views)
+        ]
+        return local_frame(
+            self.spark, rows or [], "name: string, freshness: string, last_fresh_time: string"
+        )
+
+    def _explain(self, stmt: Statement) -> DataFrame:
+        # EXPLAIN [ANALYZE] [(TYPE ...)] <stmt> (ExplainRewrite.java):
+        # returns the rendered plan as a one-column relation. TYPE maps
+        # onto Spark's explain modes: LOGICAL -> extended (analyzed +
+        # optimized logical), DISTRIBUTED -> formatted physical (stage/
+        # exchange structure), VALIDATE -> analysis only, IO -> scanned
+        # relations summary.
+        analyze = stmt.word(1) == "ANALYZE"
+        rest = stmt.text.split(None, 1)[1]
+        mode = "formatted"
+        fmt = "TEXT"
+        tm = re.match(
+            r"\(\s*((?:(?:TYPE|FORMAT)\s+\w+\s*,?\s*)+)\)\s*(.*)$",
+            rest,
+            re.IGNORECASE | re.DOTALL,
+        )
+        if tm:
+            opts = {
+                k.upper(): v.upper()
+                for k, v in re.findall(r"(TYPE|FORMAT)\s+(\w+)", tm.group(1), re.IGNORECASE)
+            }
+            rest = tm.group(2)
+            fmt = opts.get("FORMAT", "TEXT")
+            if fmt not in ("TEXT", "JSON"):
+                raise ValueError(f"EXPLAIN (FORMAT {fmt}) not supported")
+            ttype = opts.get("TYPE", "DISTRIBUTED")
+            mode = {
+                "LOGICAL": "extended",
+                "DISTRIBUTED": "formatted",
+                "VALIDATE": "validate",
+                "IO": "io",
+            }.get(ttype)
+            if mode is None:
+                raise ValueError(f"EXPLAIN (TYPE {ttype}) not supported")
+            if fmt == "JSON" and mode in ("validate",):
+                raise ValueError("EXPLAIN (FORMAT JSON) supports TYPE LOGICAL/DISTRIBUTED/IO")
+        if fmt == "JSON" and not analyze and mode != "validate":
+            # ExplainRewrite's JSON rendering: emit Spark's own plan
+            # JSON (TreeNode.toJSON) for the requested plan level
+            df = self.sql(rest)
+            qe = df._jdf.queryExecution()
+            if mode == "extended":
+                text = qe.optimizedPlan().toJSON()
+            elif mode == "io":
+                import json as _json
+
+                plan = qe.optimizedPlan().toString()
+                rels = sorted(set(re.findall(r"FileScan \S+|Relation \[[^\]]*\] \w+", plan)))
+                text = _json.dumps({"inputTableColumnInfos": rels})
+            else:
+                text = qe.executedPlan().toJSON()
+            return local_frame(self.spark, [(text,)], "query_plan: string")
+        if analyze:
+            text = self.explain_analyze(rest.split(None, 1)[1])
+        elif mode == "validate":
+            self.sql(rest).schema  # analysis only; no execution
+            text = "VALID"
+        elif mode == "io":
+            df = self.sql(rest)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            rels = sorted(set(re.findall(r"Relation \[[^\]]*\] \w+|FileScan \S+", plan))) or [
+                ln.strip() for ln in plan.splitlines() if "Relation" in ln
+            ]
+            text = "\n".join(rels) if rels else plan
+        else:
+            text = self.explain(rest, mode=mode)
+        return local_frame(self.spark, [(text,)], "query_plan: string")
+
+    def _describe(self, stmt: Statement) -> DataFrame | None:
+        # DESCRIBE <table> == SHOW COLUMNS FROM <table> (the reference
+        # rewrites it the same way, ShowQueriesRewrite.java).
+        parts = stmt.text.split()
+        return show_columns(self.spark, parts[1]) if len(parts) == 2 else None
+
+    def _set_time_zone(self, stmt: Statement) -> DataFrame:
+        # SET TIME ZONE (grammar SqlBase.g4; SetTimeZoneTask.java):
+        # maps onto Spark's session timezone, which drives timestamp
+        # rendering and AT TIME ZONE defaults. LOCAL restores UTC
+        # (this engine's canonical zone, session.py).
+        arg = stmt.text.split(None, 3)[3].strip()
+        zone = "UTC" if arg.upper() == "LOCAL" else arg.strip("'")
+        self.spark.conf.set("spark.sql.session.timeZone", zone)
+        return local_frame(self.spark, [(zone,)], "time_zone: string")
+
+    def _use(self, stmt: Statement) -> DataFrame | None:
+        # USE catalog.schema (UseTask.java): single-catalog engine —
+        # record the default schema; unqualified names already resolve
+        # against the session catalog.
+        parts = stmt.text.split()
+        if len(parts) != 2:
+            return None
+        self._current_schema = parts[1].strip('"')
+        return local_frame(self.spark, [(self._current_schema,)], "schema: string")
+
+    def _set_session_authorization(self, stmt: Statement) -> DataFrame:
+        # #setSessionAuthorization (SetSessionAuthorizationTask.java):
+        # switch the session identity; CURRENT_USER reflects it.
+        # Impersonation requires a privilege in the reference
+        # (checkCanSetUser) — a restricted role must not sidestep
+        # CURRENT_USER-based row filters/masks by switching identity,
+        # so deny under any active restricted role (the same owner
+        # gate as CREATE/DROP CATALOG).
+        if _access._state(self)["current"] is not None:
+            raise _access.AccessDenied(
+                "Access Denied: SET SESSION AUTHORIZATION requires an owner session"
+            )
+        user = stmt.text.split(None, 3)[3].strip().strip("'\"")
+        self.session_user = user
+        return local_frame(self.spark, [(user,)], "user: string")
+
+    def _reset_session_authorization(self, stmt: Statement) -> DataFrame:
+        self.session_user = "trino"
+        return local_frame(self.spark, [("trino",)], "user: string")
+
+    def _set_session(self, stmt: Statement) -> DataFrame:
+        # SET SESSION k = v (SystemSessionProperties.java surface):
+        # recorded per-engine; spark.* keys pass through to the conf.
+        key, val = session_assignment(stmt)
+        self.session_properties[key] = val
+        if key.startswith("spark."):
+            self.spark.conf.set(key, val)
+        return local_frame(self.spark, [(key, val)], "name: string, value: string")
+
+    def _reset_session(self, stmt: Statement) -> DataFrame:
+        key = stmt.text.split()[2]
+        self.session_properties.pop(key, None)
+        if key.startswith("spark."):
+            self.spark.conf.unset(key)
+        return local_frame(self.spark, [(key,)], "name: string")
+
+    def _show_create_table(self, stmt: Statement) -> DataFrame:
+        # SHOW CREATE TABLE (ShowQueriesRewrite.java): rendered DDL.
+        name = stmt.text.split()[3].strip('"').split(".")[-1].lower()
+        cols = ",\n   ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in self.spark.table(name).schema.fields
+        )
+        src = self.catalog._sources.get(name)
+        dml_path = getattr(self, "dml_tables", {}).get(name)
+        extra = getattr(self, "_table_properties", {}).get(name, {})
+        extra_txt = "".join(f",\n   {k} = '{v}'" for k, v in sorted(extra.items()))
+        if dml_path:
+            with_props = f"\nWITH (\n   format = 'PARQUET',\n   location = '{dml_path}'{extra_txt}\n)"
+        elif src is not None:
+            with_props = f"\nWITH (\n   format = '{src.format.upper()}',\n   location = '{src.path}'{extra_txt}\n)"
+        elif extra:
+            kv = ",\n   ".join(f"{k} = '{v}'" for k, v in sorted(extra.items()))
+            with_props = f"\nWITH (\n   {kv}\n)"
+        else:
+            with_props = ""
+        ddl = f"CREATE TABLE {name} (\n   {cols}\n){with_props}"
+        return local_frame(self.spark, [(ddl,)], "create_table: string")
+
+    def _show_create_materialized_view(self, stmt: Statement) -> DataFrame:
+        name = stmt.text.split()[4].strip('"').split(".")[-1].lower()
+        if name not in self.materialized_views:
+            raise ValueError(f"materialized view not found: {name}")
+        ddl = f"CREATE MATERIALIZED VIEW {name} AS\n{self.materialized_views[name]}"
+        return local_frame(self.spark, [(ddl,)], "create_materialized_view: string")
+
+    def _show_stats(self, stmt: Statement) -> DataFrame:
+        target = stmt.text.split(None, 3)[3].strip()
+        if target.startswith("("):
+            # #showStatsForQuery (ShowStatsRewrite.java handles both
+            # forms): compute the stats shape over the query result.
+            inner = target.strip()[1:-1] if target.endswith(")") else target[1:]
+            import os as _os
+
+            view = f"_show_stats_q_{_os.getpid()}"
+            self.sql(inner).createOrReplaceTempView(view)
+            return show_stats(self.spark, view)
+        return show_stats(
+            self.spark,
+            target.strip('"'),
+            cache=getattr(self, "_stats_cache", None),
+        )
+
+    def _analyze(self, stmt: Statement) -> DataFrame | None:
+        # ANALYZE <table> (grammar SqlBase.g4; AnalyzeTask.java +
+        # connector collectStatistics): run the one-pass stats
+        # aggregation now and persist it on the engine — subsequent
+        # SHOW STATS serve the collected statistics without a scan.
+        parts = stmt.text.split()
+        if len(parts) < 2:
+            return None
+        cache = getattr(self, "_stats_cache", None)
+        if cache is None:
+            cache = self._stats_cache = {}
+        tbl = parts[1].strip('"').split(".")[-1].lower()
+        cache.pop(tbl, None)
+        n = show_stats(self.spark, tbl, cache=cache, populate=True).where(
+            "column_name IS NULL"
+        ).collect()[0].row_count
+        return local_frame(self.spark, [(tbl, int(n or 0))], "table_name: string, rows: bigint")
+
+    def _prepared_params(self, stmt: Statement) -> tuple[str, int]:
+        """(name, parameter count) of `DESCRIBE INPUT|OUTPUT name`."""
+        name = stmt.text.split()[2].upper()
+        if name not in self.prepared:
+            raise ValueError(f"prepared statement not found: {name}")
+        return name, sum(1 for t in _prep.tokenize(self.prepared[name]) if t.is_sym("?"))
+
+    def _describe_output(self, stmt: Statement) -> DataFrame | None:
+        if len(stmt.text.split()) != 3:  # DESCRIBE of a table named output
+            return self._describe(stmt)
+        name, n = self._prepared_params(stmt)
+        bound = _prep.bind(self.prepared[name], ["NULL"] * n)
+        schema = self.spark.sql(translate(bound)).schema
+        return local_frame(
+            self.spark,
+            [(f.name, f.dataType.simpleString()) for f in schema],
+            "column_name string, type string",
+        )
+
+    def _describe_input(self, stmt: Statement) -> DataFrame | None:
+        if len(stmt.text.split()) != 3:  # DESCRIBE of a table named input
+            return self._describe(stmt)
+        _, n = self._prepared_params(stmt)
+        return local_frame(
+            self.spark, [(i, "unknown") for i in range(n)], "position int, type string"
+        )
 
     def register_table_function(self, name: str, handler: type, return_type: str) -> None:
         """Register a custom PTF (Python UDTF) callable as TABLE(name(...))
@@ -1166,3 +872,219 @@ class TrinoEngine:
             # py4j tree-walk is best-effort; the executed plan string still
             # reflects the AQE-final shape
             return plan.toString()
+
+
+def session_assignment(stmt: Statement) -> tuple[str, str]:
+    """(key, value) of `SET SESSION key = value`, the value unquoted. The
+    HTTP server answers the same pair in X-Trino-Set-Session, so the client
+    re-sends exactly the stored value."""
+    key, _, val = stmt.text.split(None, 2)[2].partition("=")
+    return key.strip(), val.strip().strip("'")
+
+
+def _quote(value: str) -> str:
+    return "'" + value.replace("'", "''") + "'"
+
+
+# Niladic functions, substituted as literals outside string literals.
+_NILADICS = [
+    # CURRENT_USER (#currentUser) reflects SET SESSION AUTHORIZATION.
+    (re.compile(r"\bCURRENT_USER\b", re.I), lambda e: _quote(getattr(e, "session_user", "trino"))),
+    # version() (#version, ServerInfoResource analog): the engine release.
+    (re.compile(r"\bversion\s*\(\s*\)", re.I), lambda e: _quote(__version__)),
+    # current_schema: the engine's own USE-tracked schema (the translate()
+    # fallback maps it to current_database() for raw spark.sql callers).
+    (
+        re.compile(r"(?<!\.\s)(?<!\.)\bcurrent_schema\b(?!\s*[.(])", re.I),
+        lambda e: _quote(getattr(e, "_current_schema", "default")),
+    ),
+    # current_groups() (#currentGroups): the identity model is roles, so
+    # the groups are the active role (none for the owner session).
+    (
+        re.compile(r"\bcurrent_groups\s*\(\s*\)", re.I),
+        lambda e: f"array({_quote(e._acl['current'])})"
+        if getattr(e, "_acl", {}).get("current")
+        else "CAST(array() AS ARRAY<STRING>)",
+    ),
+]
+
+
+def _task_rows(engine) -> list[tuple]:
+    # TaskSystemTable.java: live execution tasks. Local mode maps Spark's
+    # active stages — one row per (stage, running tasks).
+    sc = engine.spark.sparkContext
+    st = sc.statusTracker()
+    rows = []
+    for sid in st.getActiveStageIds():
+        info = st.getStageInfo(sid)
+        if info:
+            rows.append(
+                (
+                    sc.applicationId,
+                    f"stage-{sid}",
+                    "RUNNING",
+                    int(info.numTasks),
+                    int(info.numActiveTasks),
+                    int(info.numCompletedTasks),
+                    int(info.numFailedTasks),
+                )
+            )
+    return rows
+
+
+# {Schema,Table,Column,Analyze,MaterializedView}PropertiesSystemTable.java:
+# the property names each catalog accepts.
+_PROPERTIES = {
+    "table_properties": [
+        ("format", "varchar", "PARQUET", "File format"),
+        ("location", "varchar", "", "Storage location"),
+        ("partitioned_by", "array(varchar)", "[]", "Partition columns"),
+        ("bucketed_by", "array(varchar)", "[]", "Bucketing columns"),
+        ("bucket_count", "integer", "0", "Number of buckets"),
+    ],
+    "schema_properties": [("location", "varchar", "", "Storage location")],
+    "column_properties": [],
+    "analyze_properties": [("columns", "array(varchar)", "[]", "Columns to analyze")],
+    "materialized_view_properties": [("storage_schema", "varchar", "", "Storage schema")],
+}
+
+# JDBC driver type codes (java.sql.Types DATA_TYPE) of JdbcTypesSystemTable.
+_JDBC_TYPES = [
+    ("boolean", 16), ("tinyint", -6), ("smallint", 5), ("integer", 4), ("bigint", -5),
+    ("real", 7), ("double", 8), ("decimal", 3), ("varchar", 12), ("char", 1),
+    ("varbinary", -3), ("date", 91), ("time", 92), ("timestamp", 93),
+    ("timestamp with time zone", 2014), ("array", 2003), ("map", 2000), ("row", 2002),
+    ("json", 2000),
+]
+
+# Engine-made system tables: dotted name -> (schema, rows(engine)), served
+# as a local relation named "_" + dotted name with '_' for '.'; a string
+# is instead the SQL of a projection over information_schema (the
+# system.jdbc schema that serves JDBC DatabaseMetaData).
+_SYSTEM_TABLES = {
+    # NodesSystemTable.java: one coordinator row in local mode; on a real
+    # cluster this would enumerate executors.
+    "system.runtime.nodes": (
+        "node_id: string, http_uri: string, node_version: string, coordinator: boolean,"
+        " state: string",
+        lambda e: [
+            (
+                e.spark.sparkContext.applicationId,
+                e.spark.sparkContext.master,
+                e.spark.sparkContext.version,
+                True,
+                "active",
+            )
+        ],
+    ),
+    # InformationSchemaPageSource.java VIEWS: logical views + MVs.
+    "information_schema.views": (
+        "table_name: string, view_definition: string, view_type: string",
+        lambda e: [(n, d, "VIEW") for n, d in sorted(getattr(e, "views", {}).items())]
+        + [(n, d, "MATERIALIZED VIEW") for n, d in sorted(e.materialized_views.items())],
+    ),
+    "system.runtime.tasks": (
+        "node_id: string, task_id: string, state: string, splits: int,"
+        " running_splits: int, completed_splits: int, failed_splits: int",
+        _task_rows,
+    ),
+    **{
+        f"system.metadata.{table}": (
+            "catalog_name: string, property_name: string, type: string,"
+            " default_value: string, description: string",
+            lambda e, props=props: [("spark", *p) for p in props],
+        )
+        for table, props in _PROPERTIES.items()
+    },
+    # CatalogSystemTable.java: the session catalog + dynamic mounts.
+    "system.metadata.catalogs": (
+        "catalog_name: string, connector_name: string",
+        lambda e: [("spark", "spark")]
+        + [(n, m["connector"]) for n, m in sorted(getattr(e, "catalogs", {}).items())],
+    ),
+    # MaterializedViewSystemTable.java: name/definition/freshness.
+    "system.metadata.materialized_views": (
+        "name: string, definition: string, freshness: string",
+        lambda e: [
+            (n, e.materialized_views[n], e._mv_freshness(n)) for n in sorted(e.materialized_views)
+        ],
+    ),
+    # CommentTask.java comments, kept by dialect/access.py.
+    "system.metadata.table_comments": (
+        "table_name: string, comment: string",
+        lambda e: sorted(_access._state(e)["table_comments"].items()),
+    ),
+    "system.jdbc.tables": "SELECT 'spark' AS table_cat, table_schema AS table_schem,"
+    " table_name, 'TABLE' AS table_type FROM information_schema_tables",
+    "system.jdbc.schemas": "SELECT DISTINCT table_schema AS table_schem,"
+    " 'spark' AS table_catalog FROM information_schema_tables",
+    "system.jdbc.columns": "SELECT 'spark' AS table_cat, table_schema AS table_schem,"
+    " table_name, column_name, data_type AS type_name, ordinal_position"
+    " FROM information_schema_columns",
+    "system.jdbc.table_types": "SELECT explode(array('TABLE', 'VIEW')) AS table_type",
+    "system.jdbc.catalogs": "SELECT 'spark' AS table_cat",
+    "system.jdbc.types": ("type_name: string, data_type: int", lambda e: _JDBC_TYPES),
+    # QuerySystemTable.java: dispatch state per recorded query.
+    "system.runtime.queries": (
+        "query_id: string, state: string, user: string, query: string,"
+        " elapsed_ms: double, created: timestamp, started: timestamp, `end`: timestamp",
+        lambda e: list(getattr(e, "_query_log", [])),
+    ),
+}
+
+# The one statement dispatch table: kind -> handler(engine, Statement),
+# returning a DataFrame, or None to hand the statement to the dialect
+# translation (TrinoEngine._query). classify() matches a statement's
+# leading keywords against these keys, longest first.
+DISPATCH = {
+    **_access.HANDLERS,
+    **_branches.HANDLERS,
+    **_catalogs.HANDLERS,
+    **_dml.HANDLERS,
+    **infoschema.HANDLERS,
+    "SELECT": TrinoEngine._read,
+    "WITH": TrinoEngine._read,
+    "VALUES": TrinoEngine._read,
+    "TABLE": TrinoEngine._read,
+    "WITH FUNCTION": TrinoEngine._with_function,
+    # prepared statements (PrepareTask.java)
+    "PREPARE": TrinoEngine._prepare,
+    "DEALLOCATE": TrinoEngine._deallocate,
+    "EXECUTE": TrinoEngine._execute,
+    "EXECUTE IMMEDIATE": TrinoEngine._execute_immediate,
+    "DESCRIBE INPUT": TrinoEngine._describe_input,
+    "DESCRIBE OUTPUT": TrinoEngine._describe_output,
+    # SQL routines (dialect/routines.py)
+    "CREATE FUNCTION": TrinoEngine._create_function,
+    "CREATE OR REPLACE FUNCTION": TrinoEngine._create_function,
+    "DROP FUNCTION": TrinoEngine._drop_function,
+    "SHOW CREATE FUNCTION": TrinoEngine._show_create_function,
+    "SET PATH": TrinoEngine._set_path,
+    "SHOW FUNCTIONS": TrinoEngine._show_functions,
+    # materialized views
+    "CREATE MATERIALIZED VIEW": TrinoEngine._create_materialized_view,
+    "CREATE OR REPLACE MATERIALIZED VIEW": TrinoEngine._create_materialized_view,
+    "REFRESH MATERIALIZED VIEW": TrinoEngine._refresh_materialized_view,
+    "DROP MATERIALIZED VIEW": TrinoEngine._drop_materialized_view,
+    "SHOW MATERIALIZED VIEWS": TrinoEngine._show_materialized_views,
+    "SHOW CREATE MATERIALIZED VIEW": TrinoEngine._show_create_materialized_view,
+    # session
+    "USE": TrinoEngine._use,
+    "SET TIME ZONE": TrinoEngine._set_time_zone,
+    "SET SESSION": TrinoEngine._set_session,
+    "RESET SESSION": TrinoEngine._reset_session,
+    "SHOW SESSION": TrinoEngine._show_session,
+    "SET SESSION AUTHORIZATION": TrinoEngine._set_session_authorization,
+    "RESET SESSION AUTHORIZATION": TrinoEngine._reset_session_authorization,
+    # plans, descriptions and statistics
+    "EXPLAIN": TrinoEngine._explain,
+    "DESCRIBE": TrinoEngine._describe,
+    "SHOW CREATE TABLE": TrinoEngine._show_create_table,
+    "SHOW STATS FOR": TrinoEngine._show_stats,
+    "ANALYZE": TrinoEngine._analyze,
+}
+
+
+def classify(sql: str) -> Statement:
+    """Tokenize `sql` once and name its kind from DISPATCH's keys."""
+    return _statement.classify(sql, DISPATCH)

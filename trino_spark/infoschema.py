@@ -4,8 +4,8 @@ The reference rewrites SHOW TABLES/COLUMNS/SCHEMAS into SELECTs over
 information_schema before planning (core/trino-main/.../sql/rewrite/
 ShowQueriesRewrite.java; the schema itself is served by
 main/connector/informationschema/InformationSchemaMetadata.java). Same
-approach here: two temp views built from the engine catalog, plus a
-SHOW → SELECT rewrite used by TrinoEngine.sql.
+approach here: two temp views built from the engine catalog, plus the
+SHOW → SELECT handlers of TrinoEngine's dispatch table.
 """
 
 from __future__ import annotations
@@ -50,25 +50,37 @@ def register_information_schema(spark: SparkSession, tables: dict[str, list[tupl
     )
 
 
-def rewrite_show(sql: str) -> str | None:
-    """SHOW TABLES / SHOW COLUMNS FROM t / SHOW SCHEMAS → SELECTs.
-    Returns None when `sql` is not a SHOW statement."""
-    words = sql.strip().rstrip(";").split()
-    if not words or words[0].upper() != "SHOW":
+def _show_tables(engine, stmt):
+    return engine.spark.sql("SELECT table_name FROM information_schema_tables ORDER BY table_name")
+
+
+def _show_schemas(engine, stmt):
+    if getattr(engine, "schemas", None):
+        # CREATE SCHEMA-registered schemas union the table namespace
+        # (#showSchemas; the flat namespace maps to 'default').
+        rows = sorted(set(engine.schemas) | {"default"})
+        return local_frame(engine.spark, [(s,) for s in rows], "schema_name: string")
+    return engine.spark.sql(
+        "SELECT DISTINCT table_schema AS schema_name FROM information_schema_tables"
+    )
+
+
+def show_columns(spark: SparkSession, table: str):
+    """SHOW COLUMNS FROM t, and DESCRIBE t, as a SELECT over
+    information_schema_columns."""
+    t = table.strip('"')
+    return spark.sql(
+        "SELECT column_name, data_type, ordinal_position "
+        f"FROM information_schema_columns WHERE table_name = '{t}' "
+        "ORDER BY ordinal_position"
+    )
+
+
+def _show_columns(engine, stmt):
+    words = stmt.text.split()
+    if len(words) < 4 or words[2].upper() not in ("FROM", "IN"):
         return None
-    kind = words[1].upper() if len(words) > 1 else ""
-    if kind == "TABLES":
-        return "SELECT table_name FROM information_schema_tables ORDER BY table_name"
-    if kind == "SCHEMAS":
-        return "SELECT DISTINCT table_schema AS schema_name FROM information_schema_tables"
-    if kind == "COLUMNS" and len(words) >= 4 and words[2].upper() in ("FROM", "IN"):
-        t = words[3].strip('"')
-        return (
-            "SELECT column_name, data_type, ordinal_position "
-            f"FROM information_schema_columns WHERE table_name = '{t}' "
-            "ORDER BY ordinal_position"
-        )
-    return None
+    return show_columns(engine.spark, words[3])
 
 
 def show_stats(spark: SparkSession, table: str, cache: dict | None = None, populate: bool = False):
@@ -130,3 +142,10 @@ def show_stats(spark: SparkSession, table: str, cache: dict | None = None, popul
     if cache is not None and populate:
         cache[table] = (out, schema)
     return local_frame(spark, out, schema)
+
+
+HANDLERS = {
+    "SHOW TABLES": _show_tables,
+    "SHOW SCHEMAS": _show_schemas,
+    "SHOW COLUMNS": _show_columns,
+}

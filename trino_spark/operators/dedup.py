@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from trino_spark.functions.arrays import word_ngrams
 from trino_spark.functions.strings import normalize_text
-from trino_spark.operators.util import fan_out
+from trino_spark.operators.util import fan_out, ngram_hashes
 
 # MinHash parameters: P permutations split into B bands of R rows.
 # P(candidate | jaccard=s) = 1-(1-s^R)^B: s=0.7 -> 0.988, s=0.5 -> 0.64,
@@ -385,28 +385,9 @@ def duplicate_spans(
     # per-token hashes once, then a chained-hash combine per window —
     # the gram key never exists as a string
     th = F.transform(toks, lambda t: F.xxhash64(t))
-    n_grams = F.size(toks) - F.lit(k - 1)
-    # Documents shorter than k tokens contribute no grams. sequence(1, 0)
-    # DESCENDS in Spark ([1, 0]) and slice(th, 0, k) then throws
-    # INVALID_PARAMETER_VALUE.START, so the empty case must be an
-    # explicit empty array, not a clamped sequence bound.
-    gram_idx = F.when(n_grams >= 1, F.sequence(F.lit(1), n_grams)).otherwise(
-        F.array().cast("array<int>")
-    )
     grams = df.select(
         F.col(id_col).alias("_id"),
-        F.posexplode(
-            F.transform(
-                gram_idx,
-                # order-sensitive chained fold; xxhash64(acc, h) never
-                # overflows, so the plan is safe under ANSI sessions too
-                lambda i: F.aggregate(
-                    F.slice(th, i, k),
-                    F.lit(0).cast("long"),
-                    lambda acc, h: F.xxhash64(acc, h),
-                ),
-            )
-        ).alias("_pos", "_gh"),
+        F.posexplode(ngram_hashes(th, k)).alias("_pos", "_gh"),
     )
     dup_grams = (
         grams.groupBy("_gh")

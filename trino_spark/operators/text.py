@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trino_spark.functions.strings import normalize_text
+from trino_spark.operators.util import ngram_hashes
 
 # Minimal per-language marker sets for the n-gram/stopword heuristic
 # (language-ID over web text normally uses char-trigram models; marker words
@@ -355,32 +356,16 @@ def ngram_repetition_signals(
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     th = F.transform(toks, lambda x: F.xxhash64(x))
 
-    def gram_hashes(n: int):
-        cnt = F.size(toks) - F.lit(n - 1)
-        # sequence(1, 0) DESCENDS in Spark — the empty case must be an
-        # explicit empty array (same guard as duplicate_spans)
-        idx = F.when(cnt >= 1, F.sequence(F.lit(1), cnt)).otherwise(
-            F.array().cast("array<int>")
-        )
-        return F.transform(
-            idx,
-            lambda i: F.aggregate(
-                F.slice(th, i, n),
-                F.lit(0).cast("long"),
-                lambda acc, h: F.xxhash64(acc, h),
-            ),
-        )
-
     grams = df.select(
         F.col(id_col).alias("_id"),
         F.explode(
             F.concat(
                 F.transform(
-                    gram_hashes(2),
+                    ngram_hashes(th, 2),
                     lambda g: F.struct(F.lit(2).alias("n"), g.alias("g")),
                 ),
                 F.transform(
-                    gram_hashes(3),
+                    ngram_hashes(th, 3),
                     lambda g: F.struct(F.lit(3).alias("n"), g.alias("g")),
                 ),
             )

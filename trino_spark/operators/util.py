@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None, enabled: bool = True) -> DataFrame:
@@ -27,3 +28,25 @@ def fan_out(df: DataFrame, min_partitions: int | None = None, enabled: bool = Tr
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
     )
     return df.repartition(target)
+
+
+def ngram_hashes(token_hashes: Column, n: int) -> Column:
+    """One long per n-token window of `token_hashes` (array<long> of
+    per-token xxhash64 values), in window order: an order-sensitive
+    chained fold ``xxhash64(... xxhash64(0, h1) ..., hn)``, so the gram
+    key never exists as a string. xxhash64(acc, h) never overflows, so the
+    plan is safe under ANSI sessions too."""
+    cnt = F.size(token_hashes) - F.lit(n - 1)
+    # Arrays shorter than n have no windows. sequence(1, 0) DESCENDS in
+    # Spark ([1, 0]) and slice(th, 0, n) then throws
+    # INVALID_PARAMETER_VALUE.START, so the empty case must be an
+    # explicit empty array, not a clamped sequence bound.
+    idx = F.when(cnt >= 1, F.sequence(F.lit(1), cnt)).otherwise(F.array().cast("array<int>"))
+    return F.transform(
+        idx,
+        lambda i: F.aggregate(
+            F.slice(token_hashes, i, n),
+            F.lit(0).cast("long"),
+            lambda acc, h: F.xxhash64(acc, h),
+        ),
+    )

@@ -16,16 +16,17 @@ throughout — against the deterministic generator tables of
 sources/tpcdsgen.py, with DuckDB running the SAME text over the SAME
 materialized parquet as the oracle.
 
-GENERATED by scripts/adapt_tpcds.py — documented adaptations (each
-applied identically to both engines, so the comparison stays
-meaningful): catalog-prefix strip; tpcds_ view-name qualification (the
-testdata `customer` view would otherwise collide); surfaced DECIMAL
-aggregates cast to DOUBLE (avgs/ratios rounded) because Spark returns
-Decimal objects where DuckDB's pandas bridge returns float64 and
-decimal avg/division scale rules differ; explicit aliases on unaliased
-outputs (the driver's comparator matches columns by name); q97 integer
-CASE-sums cast to BIGINT (DuckDB widens to HUGEINT); q51 d_date cast to
-TIMESTAMP + its column aliases renamed out of the table-qualifier's way.
+The query text was adapted once from the reference's SQL files, by the
+rules listed here (each applied identically to both engines, so the
+comparison stays meaningful): catalog-prefix strip; tpcds_ view-name
+qualification (the testdata `customer` view would otherwise collide);
+surfaced DECIMAL aggregates cast to DOUBLE (avgs/ratios rounded) because
+Spark returns Decimal objects where DuckDB's pandas bridge returns
+float64 and decimal avg/division scale rules differ; explicit aliases on
+unaliased outputs (the oracle comparison matches columns by name); q97
+integer CASE-sums cast to BIGINT (DuckDB widens to HUGEINT); q51 d_date
+cast to TIMESTAMP + its column aliases renamed out of the
+table-qualifier's way.
 """
 
 from __future__ import annotations

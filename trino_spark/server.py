@@ -454,56 +454,39 @@ class TrinoHttpServer:
                 out[k.strip().upper()] = urllib.parse.unquote_plus(v.strip())
         return out
 
-    def _session_response_headers(self, sql: str) -> dict:
+    def _session_response_headers(self, stmt) -> dict:
         """SET/RESET SESSION statements answer with X-Trino-Set-Session /
         X-Trino-Clear-Session so the CLIENT carries the state forward
         (QueryResource / ProtocolHeaders.responseSetSession semantics)."""
         import urllib.parse
 
-        toks = sql.strip().split()
-        up = [t.upper() for t in toks[:3]]
-        if (
-            up[:2] == ["SET", "SESSION"]
-            and len(toks) >= 3
-            and up[2] != "AUTHORIZATION"
-            and "=" in " ".join(toks[2:])
-        ):
-            key, _, val = " ".join(toks[2:]).partition("=")
-            # mirror the engine's own value normalization (engine.py SET
-            # SESSION path) so the client re-sends EXACTLY the stored value;
+        from trino_spark.dialect import prepared as _prep
+        from trino_spark.dialect.engine import session_assignment
+
+        words = stmt.text.split()
+        if stmt.kind == "SET SESSION" and "=" in stmt.text:
+            key, val = session_assignment(stmt)
             # URL-encode so ',' / '=' in the value survive the header.
-            val = val.strip().strip("'")
-            return {
-                "X-Trino-Set-Session": f"{key.strip()}={urllib.parse.quote_plus(val)}"
-            }
-        if (
-            up[:2] == ["RESET", "SESSION"]
-            and len(toks) >= 3
-            and up[2] != "AUTHORIZATION"
-        ):
-            return {"X-Trino-Clear-Session": toks[2]}
-        if up[:1] == ["PREPARE"] and len(toks) >= 4:
-            # PREPARE name FROM stmt → X-Trino-Added-Prepare so the CLIENT
-            # holds the definition (responseAddedPrepare).
-            import urllib.parse
-
-            from trino_spark.dialect import prepared as _prep
-
+            return {"X-Trino-Set-Session": f"{key}={urllib.parse.quote_plus(val)}"}
+        if stmt.kind == "RESET SESSION" and len(words) >= 3:
+            return {"X-Trino-Clear-Session": words[2]}
+        if stmt.kind in ("PREPARE", "DEALLOCATE"):
+            # X-Trino-Added-Prepare / X-Trino-Deallocated-Prepare: the
+            # CLIENT holds the definitions (responseAddedPrepare). A
+            # malformed statement gets no header and fails in the engine.
             try:
-                parsed = _prep.parse_prepare(sql)
-            except ValueError:
-                parsed = None
-            if parsed:
-                name, body = parsed
-                return {
-                    "X-Trino-Added-Prepare": f"{name.lower()}={urllib.parse.quote_plus(body)}"
-                }
-        if up[:2] == ["DEALLOCATE", "PREPARE"] and len(toks) == 3:
-            return {"X-Trino-Deallocated-Prepare": toks[2].lower()}
-        if up[:1] == ["USE"] and len(toks) == 2:
+                if stmt.kind == "PREPARE":
+                    name, body = _prep.parse_prepare(stmt.text)
+                    return {
+                        "X-Trino-Added-Prepare": f"{name.lower()}={urllib.parse.quote_plus(body)}"
+                    }
+                return {"X-Trino-Deallocated-Prepare": _prep.parse_deallocate(stmt.text).lower()}
+            except (ValueError, IndexError):
+                return {}
+        if stmt.kind == "USE" and len(words) == 2:
             # USE [catalog.]schema answers X-Trino-Set-Catalog/Schema
             # (UseTask.java + ProtocolHeaders.responseSetCatalog/Schema).
-            target = toks[1].strip('"')
+            target = words[1].strip('"')
             if "." in target:
                 cat, _, sch = target.partition(".")
                 return {"X-Trino-Set-Catalog": cat, "X-Trino-Set-Schema": sch}
@@ -553,7 +536,10 @@ class TrinoHttpServer:
         # protocol is stateless-server: the CLIENT carries the property
         # forward. Pre-compute the affected key so the restore loop also
         # reverts the engine-global mutation the statement performs.
-        stmt_hdrs = self._session_response_headers(sql)
+        from trino_spark.dialect.engine import classify
+
+        stmt = classify(sql)
+        stmt_hdrs = self._session_response_headers(stmt)
         sc = self.engine.spark.sparkContext
         running = getattr(self.engine, "_running_queries", None)
         if running is None:
@@ -606,7 +592,7 @@ class TrinoHttpServer:
             t0 = _time.perf_counter()
             try:
                 _check_killed()
-                df = self.engine.sql(sql)
+                df = self.engine.sql(stmt)
                 _check_killed()
                 columns = [
                     {"name": f.name, "type": _trino_type(f.dataType)} for f in df.schema
